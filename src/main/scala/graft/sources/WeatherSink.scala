@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.operators.Dedup
 
@@ -24,82 +25,61 @@ object WeatherSink {
     df.write.mode("overwrite").partitionBy("date").parquet(path)
 
   /** Keyed upsert into the table (the reference's ON CONFLICT DO UPDATE,
-    * py:422-452): merge the incoming batch with the current table via
-    * [[Dedup.upsert]] and atomically swap the result in (stage-then-rename,
-    * the parquet stand-in for the reference's single transaction with
-    * rollback, py:454-468; SURVEY.md §7.7).
+    * py:422-452), scoped to the date partitions the batch touches: the
+    * batch's distinct dates are collected to the driver (one for a daily
+    * run), only the stored `date=…` directories among them are read — by
+    * explicit path, so the table's other directories are never listed —
+    * merged with the batch via [[Dedup.upsert]] and written back with
+    * per-write dynamic partition overwrite. A daily batch therefore costs
+    * its own partitions' IO whatever the history behind it; untouched
+    * partitions keep their files.
     *
-    * Scale note: for a daily 15-row batch into a 100 TB table one would
-    * enable dynamic partition overwrite and restrict the union to the
-    * partitions present in the incoming batch — the incoming `date` set
-    * prunes the `existing` scan, so cost is proportional to touched
-    * partitions, not table size. That pruning happens automatically here
-    * because both sides are read with the same `date` partition column.
+    * Commit: Spark writes the touched partitions to a staging directory,
+    * then deletes each touched `date=…` directory and renames its new
+    * files in. That is not the reference's single transaction with
+    * rollback (py:454-468): a crash inside the commit can lose the
+    * partitions being replaced, but never the untouched history. A
+    * leftover of an interrupted [[compact]] is repaired first.
     */
   def upsertInto(spark: SparkSession, incoming: DataFrame, path: String): Unit = {
+    recover(path)
     val target = Paths.get(path)
     if (!Files.exists(target)) {
       write(incoming, path)
       return
     }
-    val existing = spark.read.parquet(path)
-    val merged = Dedup.upsert(existing, incoming, naturalKey,
-      versionCol = "extraction_timestamp")
-    val staged = path.stripSuffix("/") + ".__staging__"
-    write(merged, staged)
-    // Atomic-enough swap for a single-writer pipeline (max_active_runs=1
-    // in the reference, py:63): old table is replaced only after the
-    // staged write fully succeeded.
-    val old = path.stripSuffix("/") + ".__old__"
-    deleteRecursively(Paths.get(old))
-    Files.move(target, Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(staged), target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(Paths.get(old))
-  }
-
-  /** Partition-scoped upsert — the shape that holds at 100 TB: only the
-    * DATE PARTITIONS present in the incoming batch are read, merged and
-    * rewritten (via dynamic partition overwrite), so a 15-row daily
-    * batch costs one partition's worth of IO regardless of table size.
-    * [[upsertInto]] rewrites the whole table and remains the
-    * full-refresh / schema-change path; this is the daily-increment
-    * path. The touched-partition list is collected to the driver —
-    * bounded by the batch's distinct dates (1 for a daily run), never
-    * by table cardinality.
-    */
-  def upsertPartitions(spark: SparkSession, incoming: DataFrame,
-      path: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    if (!Files.exists(Paths.get(path))) {
-      write(incoming, path)
-      return
-    }
-    val touched = incoming.select(col("date")).distinct()
-      .collect().map(_.get(0))
-    val existingTouched = spark.read.parquet(path)
-      .filter(col("date").isin(touched: _*))
-    val merged = Dedup.upsert(existingTouched, incoming, naturalKey,
-      versionCol = "extraction_timestamp")
-    // overwrite ONLY partitions we write — per-WRITE dynamic mode via
-    // the writer option, not a session-conf set/restore (concurrent
-    // writers can interleave a global toggle; r10 ADVICE)
+    // Spark names a partition directory by the value cast to string; ingest
+    // rejects documents without `dt`, so `date` is never null here
+    val touched = incoming.select(col("date").cast("string")).distinct()
+      .collect().map(r => target.resolve(s"date=${r.getString(0)}"))
+      .filter(Files.isDirectory(_))
+    val merged =
+      if (touched.isEmpty) incoming
+      else Dedup.upsert(
+        spark.read.option("basePath", path).parquet(touched.map(_.toString): _*),
+        incoming, naturalKey, versionCol = "extraction_timestamp")
+    // per-write dynamic mode, not a session-conf toggle that concurrent
+    // writers could interleave
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date").parquet(path)
   }
 
-  /** Compact the table's small files: every incremental upsert rewrites
-    * the table as `shuffle.partitions` files per date partition, and a
-    * year of daily batches leaves thousands of KB-sized files whose
-    * open/footer overhead dominates scans at 100 TB. Rewrites the table
-    * to ≈ `targetFileBytes` per file (estimated from current on-disk
-    * size) with the same stage-and-swap as [[upsertInto]]; rows are
-    * hash-distributed on the partition column so each date directory
-    * compacts toward a single file.
+  /** Compact the table's small files: each upsert rewrites its touched
+    * partitions as up to `shuffle.partitions` files per date, and a year
+    * of daily batches leaves KB-sized files whose open/footer overhead
+    * dominates scans at 100 TB. Rewrites the table to ≈ `targetFileBytes`
+    * per file (estimated from current on-disk size) into a staging
+    * directory and swaps it in with two renames (`<path>` → `.__old__`,
+    * `.__staging__` → `<path>`); rows are hash-distributed on the
+    * partition column so each date directory compacts toward a single
+    * file. A crash between the renames leaves only `.__old__`, which the
+    * next [[compact]] or [[upsertInto]] restores.
     */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
+    recover(path)
     val target = Paths.get(path)
     if (!Files.exists(target)) return
     val walk = Files.walk(target)
@@ -107,15 +87,30 @@ object WeatherSink {
       try walk.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
       finally walk.close() // the stream holds directory handles
     val nFiles = math.max(1L, (onDisk + targetFileBytes - 1) / targetFileBytes)
-    val df = spark.read.parquet(path)
-      .repartition(nFiles.toInt, org.apache.spark.sql.functions.col("date"))
-    val staged = path.stripSuffix("/") + ".__staging__"
-    df.write.mode("overwrite").partitionBy("date").parquet(staged)
-    val old = path.stripSuffix("/") + ".__old__"
-    deleteRecursively(Paths.get(old))
-    Files.move(target, Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(staged), target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(Paths.get(old))
+    val df = spark.read.parquet(path).repartition(nFiles.toInt, col("date"))
+    val (staged, old) = swapPaths(path)
+    df.write.mode("overwrite").partitionBy("date").parquet(staged.toString)
+    Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
+    Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+    deleteRecursively(old)
+  }
+
+  /** Repair what an interrupted [[compact]] leaves: with `<path>` missing,
+    * `.__old__` is the last committed table and moves back; otherwise it
+    * is stale. A `.__staging__` is never committed data.
+    */
+  private def recover(path: String): Unit = {
+    val target = Paths.get(path)
+    val (staged, old) = swapPaths(path)
+    if (!Files.exists(target) && Files.exists(old))
+      Files.move(old, target, StandardCopyOption.ATOMIC_MOVE)
+    deleteRecursively(old)
+    deleteRecursively(staged)
+  }
+
+  private def swapPaths(path: String): (Path, Path) = {
+    val base = path.stripSuffix("/")
+    (Paths.get(base + ".__staging__"), Paths.get(base + ".__old__"))
   }
 
   private def deleteRecursively(p: Path): Unit =

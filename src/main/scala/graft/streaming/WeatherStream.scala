@@ -21,8 +21,11 @@ import graft.sources.WeatherSink
   *    state is bounded by the watermark instead of growing forever
   *  - A1/A3 quality → windowed event-time aggregation with watermark
   *  - S8 upsert sink → `foreachBatch` calling the batch upsert: each
-  *    micro-batch merges transactionally, giving exactly-once-per-key
-  *    last-writer-wins on top of at-least-once delivery
+  *    micro-batch merges into the date partitions it touches, and a
+  *    replayed batch merges to the same rows, giving last-writer-wins per
+  *    key on top of at-least-once delivery. The merge is not
+  *    transactional: a crash inside its commit can lose the touched
+  *    partitions (see [[WeatherSink.upsertInto]])
   */
 object WeatherStream {
 

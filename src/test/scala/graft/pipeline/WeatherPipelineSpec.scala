@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ingest.Fixtures
 import graft.model.WeatherModel
-import graft.operators.WeatherTransform
+import graft.operators.{Dedup, WeatherTransform}
 import graft.quality.QualityChecks
 import graft.sources.WeatherSink
 
@@ -55,40 +55,78 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(table.select("temperature").collect()(0).getDouble(0) === 25.0)
   }
 
-  test("upsertPartitions touches only the incoming batch's partitions") {
+  /** Fixtures.full moved to epoch second `dt` with temperature `temp`,
+    * extracted at `extractedAt`.
+    */
+  private def reading(dt: Long, temp: Double, extractedAt: String) =
+    WeatherTransform.transform(graft.ingest.WeatherIngest.flatten(
+      Fixtures.df(spark, Fixtures.full.replace("1700000000", dt.toString)
+        .replace("\"temp\":22.5", s"\"temp\":$temp")),
+      WeatherModel.regionDim(spark),
+      extractionTime = to_timestamp(lit(extractedAt))))
+
+  /** Every parquet file under `dir` whose path contains `part`, with mtime. */
+  private def filesOf(dir: String, part: String) = {
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try walk.filter(p => p.toString.contains(part) &&
+        p.toString.endsWith(".parquet"))
+      .map[(String, java.nio.file.attribute.FileTime)](p =>
+        (p.toString, Files.getLastModifiedTime(p)))
+      .toArray.toSeq
+    finally walk.close()
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+
+  test("upsertInto rewrites only the incoming batch's partitions") {
     val dir = Files.createTempDirectory("graft_dynpart").toString + "/t"
-    val day1 = transformed(Fixtures.full)        // date 2023-11-14
-    val day2raw = Fixtures.df(spark,
-      Fixtures.full.replace("1700000000", "1700090000")) // next day
-    val day2 = WeatherTransform.transform(
-      graft.ingest.WeatherIngest.flatten(day2raw, WeatherModel.regionDim(spark),
-        extractionTime = to_timestamp(lit("2023-11-15 06:00:00"))))
-    WeatherSink.write(day1.unionByName(day2), dir)
-    def filesOf(datePart: String) = {
-      val d = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.walk(d).filter(_.toString.contains(datePart))
-        .filter(_.toString.endsWith(".parquet"))
-        .map[(String, java.nio.file.attribute.FileTime)](p =>
-          (p.toString, java.nio.file.Files.getLastModifiedTime(p)))
-        .toArray.toSeq
-    }
-    val day1FilesBefore = filesOf("date=2023-11-14")
-    assert(day1FilesBefore.nonEmpty)
-    // incoming touches ONLY day 2 with a changed temperature
-    val day2v2raw = Fixtures.df(spark, Fixtures.full
-      .replace("1700000000", "1700090000").replace("22.5", "30.5"))
-    val day2v2 = WeatherTransform.transform(
-      graft.ingest.WeatherIngest.flatten(day2v2raw, WeatherModel.regionDim(spark),
-        extractionTime = to_timestamp(lit("2023-11-15 07:00:00"))))
-    WeatherSink.upsertPartitions(spark, day2v2, dir)
-    // day-1 partition untouched (same files, same mtimes); day-2 updated
-    assert(filesOf("date=2023-11-14") === day1FilesBefore,
+    // stored: 2023-11-14, 2023-11-15, 2023-11-16
+    val stored = Seq(1700000000L, 1700090000L, 1700176400L)
+      .map(reading(_, 22.5, "2023-11-17 06:00:00")).reduce(_ unionByName _)
+    WeatherSink.write(stored, dir)
+    val before = spark.read.parquet(dir)
+    val beforeDf = spark.createDataFrame(
+      java.util.Arrays.asList(before.collect(): _*), before.schema)
+    val untouched = filesOf(dir, "date=2023-11-16")
+    assert(untouched.nonEmpty)
+    val incoming = Seq(
+      reading(1700000000L, 30.5, "2023-11-18 06:00:00"), // re-extraction
+      reading(1700086400L, 18.0, "2023-11-18 06:00:00"), // late, 2023-11-15
+      reading(1700262800L, 25.0, "2023-11-18 06:00:00")  // new date 2023-11-17
+    ).reduce(_ unionByName _)
+    WeatherSink.upsertInto(spark, incoming, dir)
+    assert(filesOf(dir, "date=2023-11-16") === untouched,
       "untouched partition must not be rewritten")
     val table = spark.read.parquet(dir)
-    assert(table.count() === 2)
-    val newTemp = table.filter(col("date") === lit("2023-11-15"))
-      .select("temperature").collect()(0).getDouble(0)
-    assert(newTemp === 30.5)
+    val expected = Dedup.upsert(beforeDf, incoming, WeatherSink.naturalKey,
+      versionCol = "extraction_timestamp")
+    assert(table.count() === 5)
+    assert(sortedRows(table) ===
+      sortedRows(expected.select(table.columns.map(col): _*)))
+  }
+
+  test("an interrupted compact swap is restored, not overwritten") {
+    for (op <- Seq("upsertInto", "compact")) {
+      val dir = Files.createTempDirectory("graft_swap").toString + "/t"
+      WeatherSink.write(reading(1700000000L, 22.5, "2023-11-15 06:00:00"), dir)
+      // crash after `t -> t.__old__`, before `t.__staging__ -> t`, with a
+      // half-written staging directory
+      Files.move(java.nio.file.Paths.get(dir),
+        java.nio.file.Paths.get(dir + ".__old__"))
+      Files.write(Files.createDirectories(
+        java.nio.file.Paths.get(dir + ".__staging__", "date=2023-11-14"))
+        .resolve("part-0.parquet"), Array[Byte](1, 2, 3))
+      if (op == "compact") WeatherSink.compact(spark, dir)
+      else WeatherSink.upsertInto(spark,
+        reading(1700090000L, 24.0, "2023-11-16 06:00:00"), dir)
+      val temps = spark.read.parquet(dir).orderBy("data_timestamp")
+        .select("temperature").collect().map(_.getDouble(0)).toSeq
+      assert(temps === (if (op == "compact") Seq(22.5) else Seq(22.5, 24.0)),
+        s"$op lost the history")
+      assert(!Files.exists(java.nio.file.Paths.get(dir + ".__old__")))
+      assert(!Files.exists(java.nio.file.Paths.get(dir + ".__staging__")))
+    }
   }
 
   test("weather store prunes partitions on date (the reference's index analog)") {
