@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.ingest.WeatherIngest
 import graft.model.WeatherModel
@@ -16,9 +19,10 @@ import graft.sources.WeatherSink
   * The reference crosses a process boundary at every task hop (XCom
   * serialization, py:209/291/397) and a network boundary at API and DB.
   * Here the stages are pure `DataFrame => DataFrame` functions composed
-  * lazily; the only materialization points are the sink write and the
-  * quality-check collect — Catalyst sees the whole dataflow and fuses it
-  * (SURVEY.md §3.1).
+  * lazily, and Catalyst sees the whole dataflow and fuses it (SURVEY.md
+  * §3.1). The Spark actions are the two `head(1)` emptiness guards, the
+  * sink's collect of the batch's dates, the sink write and the
+  * quality-check collect.
   */
 object WeatherPipeline {
 
@@ -30,28 +34,58 @@ object WeatherPipeline {
     *                      boundary; live HTTP fetch is a driver concern,
     *                      out of engine scope — SURVEY.md S1)
     * @param tablePath     sink parquet table (date-partitioned)
-    * @param checkDate     quality-check date (reference uses "today", py:480)
+    * @param checkDate     quality-check date (reference uses "today", py:480);
+    *                      a constant expression such as `lit(...)` or
+    *                      `current_date()`, folded once before any work
     */
   def run(spark: SparkSession, documentsPath: String, tablePath: String,
       checkDate: Column, extractionTime: Column = current_timestamp()): Result = {
+    val (onDate, partition) = foldCheckDate(spark, checkDate)
     val raw = WeatherIngest.readDocuments(spark, documentsPath)
     val flat = WeatherIngest.flatten(raw, WeatherModel.regionDim(spark),
       extractionTime)
     // cache across the two C2 guards and the sink write — without it the
     // source scan + flatten re-execute three times
     flat.persist()
+    val transformed = WeatherTransform.transform(flat)
     try {
       require(flat.head(1).nonEmpty,
         "No weather data was successfully extracted")
-      val transformed = WeatherTransform.transform(flat)
       require(transformed.head(1).nonEmpty,
         "No data received from extraction task")
       WeatherSink.upsertInto(spark, transformed, tablePath)
     } finally flat.unpersist()
-    val table = spark.read.parquet(tablePath)
-    val report = QualityChecks.report(table, checkDate)
+    // only rows of the checked date's partition can match, so the checks
+    // read that directory alone (the reference's `WHERE date = :today`
+    // index scan); with no such partition they see no rows, as a full
+    // read filtered on the date would
+    val table = WeatherSink.readDates(spark, tablePath, partition.toSeq)
+      .getOrElse(transformed.limit(0))
+    val report = QualityChecks.report(table, onDate)
     report.warnings.foreach(w => System.err.println(s"[quality] WARN: $w"))
     Result(tablePath, report)
+  }
+
+  /** `checkDate` folded to a literal on the driver by Catalyst's constant
+    * folding, which starts no Spark job: the value the checks compare
+    * `date` with, and the `date=…` partition that can hold rows equal to
+    * it (`None` when it is null). Folding once also pins
+    * `current_date()` to the start of the run.
+    */
+  private def foldCheckDate(spark: SparkSession, checkDate: Column)
+      : (Column, Option[String]) = {
+    def notConstant(cause: Throwable) = new IllegalArgumentException(
+      s"checkDate must be a constant date expression, got $checkDate", cause)
+    val plan =
+      try spark.range(1)
+        .select(checkDate, checkDate.cast("date").cast("string"))
+        .queryExecution.optimizedPlan
+      catch { case e: AnalysisException => throw notConstant(e) }
+    plan match {
+      case Project(Seq(Alias(value: Literal, _), Alias(Literal(day, _), _)), _) =>
+        (ColumnBridge.column(value), Option(day).map(_.toString))
+      case _ => throw notConstant(null)
+    }
   }
 
   /** Pure (no sink) variant: documents DataFrame in, analytical table out.

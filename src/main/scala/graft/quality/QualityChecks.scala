@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
   *
   * The reference pushes three parameterized SQL aggregates to Postgres
   * (`WHERE date = :today`, index-assisted). Here the same predicates hit
-  * the `date` partition column of the parquet sink, so partition pruning
-  * gives the index-scan effect for free; each check is one small aggregate
-  * job with a map-side partial.
+  * the `date` partition column of the parquet sink. The index-scan
+  * analog is the caller's: `WeatherPipeline.run` hands in only the
+  * checked date's partition directory, because a filtered read of the
+  * whole table prunes the other dates' files but still lists every
+  * `date=…` directory. Each check is one small aggregate job with a
+  * map-side partial.
   *
   * As in the reference, failed expectations WARN, they do not fail the
   * pipeline (py:496/513/529 use logging.warning).

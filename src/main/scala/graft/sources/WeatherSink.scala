@@ -27,8 +27,7 @@ object WeatherSink {
   /** Keyed upsert into the table (the reference's ON CONFLICT DO UPDATE,
     * py:422-452), scoped to the date partitions the batch touches: the
     * batch's distinct dates are collected to the driver (one for a daily
-    * run), only the stored `date=…` directories among them are read — by
-    * explicit path, so the table's other directories are never listed —
+    * run), the stored partitions among them are read with [[readDates]],
     * merged with the batch via [[Dedup.upsert]] and written back with
     * per-write dynamic partition overwrite. A daily batch therefore costs
     * its own partitions' IO whatever the history behind it; untouched
@@ -43,26 +42,37 @@ object WeatherSink {
     */
   def upsertInto(spark: SparkSession, incoming: DataFrame, path: String): Unit = {
     recover(path)
-    val target = Paths.get(path)
-    if (!Files.exists(target)) {
+    if (!Files.exists(Paths.get(path))) {
       write(incoming, path)
       return
     }
-    // Spark names a partition directory by the value cast to string; ingest
-    // rejects documents without `dt`, so `date` is never null here
-    val touched = incoming.select(col("date").cast("string")).distinct()
-      .collect().map(r => target.resolve(s"date=${r.getString(0)}"))
-      .filter(Files.isDirectory(_))
-    val merged =
-      if (touched.isEmpty) incoming
-      else Dedup.upsert(
-        spark.read.option("basePath", path).parquet(touched.map(_.toString): _*),
-        incoming, naturalKey, versionCol = "extraction_timestamp")
+    // ingest rejects documents without `dt`, so `date` is never null here
+    val dates = incoming.select(col("date").cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq
+    val merged = readDates(spark, path, dates) match {
+      case None => incoming
+      case Some(stored) => Dedup.upsert(stored, incoming, naturalKey,
+        versionCol = "extraction_timestamp")
+    }
     // per-write dynamic mode, not a session-conf toggle that concurrent
     // writers could interleave
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date").parquet(path)
+  }
+
+  /** The stored partitions of `dates` (`yyyy-MM-dd`: Spark names a
+    * partition directory by the value cast to string), read by explicit
+    * `date=…` path with `basePath`, so the table's other directories are
+    * never listed. `None` when the table holds none of them.
+    */
+  def readDates(spark: SparkSession, path: String, dates: Seq[String])
+      : Option[DataFrame] = {
+    val dirs = dates.distinct.map(d => Paths.get(path).resolve(s"date=$d"))
+      .filter(Files.isDirectory(_))
+    if (dirs.isEmpty) None
+    else Some(spark.read.option("basePath", path)
+      .parquet(dirs.map(_.toString): _*))
   }
 
   /** Compact the table's small files: each upsert rewrites its touched

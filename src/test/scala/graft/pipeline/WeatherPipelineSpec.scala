@@ -129,11 +129,126 @@ class WeatherPipelineSpec extends SparkSpec {
     }
   }
 
+  /** Fixtures.full for `region` at epoch second `dt` with `temp`. */
+  private def doc(region: String, dt: Long, temp: Double) =
+    Fixtures.full.replace("Nakuru", region).replace("1700000000", dt.toString)
+      .replace("\"temp\":22.5", s"\"temp\":$temp")
+
+  private val day = 86400L
+
+  /** A table of 42 daily partitions, 2023-10-03 .. 2023-11-13, two
+    * regions each, loaded through [[WeatherPipeline.run]].
+    */
+  private def history(): String = {
+    val dir = Files.createTempDirectory("graft_run").toString + "/t"
+    val docs = (1 to 42).flatMap(k => Seq(
+      doc("Nakuru", 1700000000L - k * day, k.toDouble),
+      doc("Meru", 1700000000L - k * day + 60, k + 0.5)))
+    WeatherPipeline.run(spark, jsonl(docs), dir,
+      lit("2023-11-13").cast("date"))
+    dir
+  }
+
+  /** The next day's batch: two readings on the new date 2023-11-14, a late
+    * reading for 2023-11-10 and a re-extraction of a stored 2023-11-12 key.
+    */
+  private def dailyBatch(): String = jsonl(Seq(
+    doc("Nakuru", 1700000000L, 22.5),
+    doc("Meru", 1700000060L, 31.0),
+    doc("Nakuru", 1700000000L - 4 * day + 3600, 45.5),
+    doc("Nakuru", 1700000000L - 2 * day, -3.0)))
+
+  private def jsonl(docs: Seq[String]): String = {
+    val f = Files.createTempFile("graft_docs", ".json")
+    Files.write(f, java.util.Arrays.asList(docs: _*))
+    f.toString
+  }
+
+  test("run's quality report equals the checks over the whole table") {
+    val dir = history()
+    assert(new java.io.File(dir).list().count(_.startsWith("date=")) === 42)
+    val batch = dailyBatch()
+    // label, check date, regions reporting on it
+    val checks = Seq(
+      ("in the batch", lit("2023-11-14").cast("date"), 2),
+      ("stored, not in the batch", lit("2023-10-05"), 2),
+      ("no partition", to_date(lit("2024-01-01")), 0),
+      ("null", lit(null), 0),
+      ("folded", date_add(lit("2023-11-09").cast("date"), 1), 2))
+    for ((label, d, regions) <- checks) {
+      val got = WeatherPipeline.run(spark, batch, dir, d).quality
+      // reference: the checks over a read of the whole table
+      val want = QualityChecks.report(spark.read.parquet(dir), d)
+      assert(got === want, label)
+      assert(want.regionCount === regions, label)
+    }
+    val before = filesOf(dir, "")
+    val e = intercept[IllegalArgumentException] {
+      WeatherPipeline.run(spark, batch, dir, col("date"))
+    }
+    assert(e.getMessage.contains("constant date expression"))
+    assert(filesOf(dir, "") === before, "table changed before the rejection")
+  }
+
+  test("run into a 42-partition table starts no job over its directories") {
+    val dir = history()
+    val batch = dailyBatch()
+    val group = s"guard-${System.nanoTime()}"
+    val jobTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var drained = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobTasks.add(e.stageInfos.map(_.numTasks).sum)
+          case Some(g) if g == group + "-drain" => drained = true
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "run")
+      WeatherPipeline.run(spark, batch, dir, lit("2023-11-14").cast("date"))
+      // listener events arrive in order: once this job's start is seen,
+      // every job `run` started has been counted
+      sc.setJobGroup(group + "-drain", "drain")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus not drained")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val tasks = jobTasks.toArray.toSeq.map(_.asInstanceOf[Int])
+    assert(tasks.nonEmpty)
+    assert(tasks.max < 40, s"tasks per job: ${tasks.mkString(", ")}")
+  }
+
+  test("readDates reads exactly the stored partitions it is asked for") {
+    val dir = history()
+    val dates = Seq("2023-10-04", "2023-12-01", "2023-11-13", "2023-10-04")
+    val got = WeatherSink.readDates(spark, dir, dates).get
+    val want = spark.read.parquet(dir).filter(col("date").isin(dates: _*))
+    assert(want.count() === 4)
+    assert(sortedRows(got) === sortedRows(want.select(got.columns.map(col): _*)))
+    val asked = Seq("2023-10-04", "2023-11-13")
+      .map(d => java.nio.file.Paths.get(dir, s"date=$d"))
+    assert(got.inputFiles.nonEmpty && got.inputFiles.forall(f =>
+      asked.contains(java.nio.file.Paths.get(new java.net.URI(f)).getParent)),
+      got.inputFiles.mkString(", "))
+    assert(WeatherSink.readDates(spark, dir, Seq("2023-12-01")).isEmpty)
+    assert(WeatherSink.readDates(spark, dir + "-missing", dates).isEmpty)
+  }
+
   test("weather store prunes partitions on date (the reference's index analog)") {
     // py:116-119's b-tree date index maps to partitionBy("date") +
     // partition pruning: a date-filtered read must carry a real
-    // PartitionFilter and touch ONLY that date's files — the property
-    // that makes the daily 15-row upsert O(day), not O(table), at 100 TB
+    // PartitionFilter and touch ONLY that date's files. Pruning skips the
+    // other dates' files, not their directories: the read still lists
+    // every `date=…` directory, so the sink's own reads name their
+    // partitions by path (WeatherSink.readDates)
     val dir = Files.createTempDirectory("graft_prune").toString + "/t"
     val day1 = transformed(Fixtures.full)        // date 2023-11-14
     val day2 = WeatherTransform.transform(
