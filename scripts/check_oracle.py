@@ -5,7 +5,10 @@ NOT part of the engine (the engine is pure Scala/Spark). This script
 replays what the driver does with a Verify output directory: register the
 testdata parquet tables in DuckDB, run each oracle SQL, and value-compare
 against the Spark parquet result (columns sorted by name, rows as
-written). Usage:
+written). Each oracle query runs under a fixed limit of ORACLE_TIMEOUT_S
+seconds; one that runs past it reports ORACLE-TIMEOUT, which is neither a
+match nor a FAIL. The exit status is non-zero on any FAIL or
+ORACLE-TIMEOUT. Usage:
 
     python3 scripts/check_oracle.py /root/testdata/sf0.001 /tmp/verify_out
 """
@@ -14,6 +17,7 @@ import json
 import math
 import struct
 import sys
+import threading
 
 import duckdb
 import pyarrow.parquet as pq
@@ -34,20 +38,55 @@ def norm(v):
     return str(v)
 
 
+ORACLE_TIMEOUT_S = 180
+
+
+class OracleTimeout(Exception):
+    pass
+
+
+def run_oracle(con, sql, fetch):
+    """fetch(con.execute(sql)), interrupted after ORACLE_TIMEOUT_S seconds
+    (raises OracleTimeout then)."""
+    fired = threading.Event()
+
+    def stop():
+        fired.set()
+        con.interrupt()
+
+    timer = threading.Timer(ORACLE_TIMEOUT_S, stop)
+    timer.start()
+    try:
+        return fetch(con.execute(sql))
+    except duckdb.InterruptException:
+        if fired.is_set():
+            raise OracleTimeout() from None
+        raise
+    finally:
+        timer.cancel()
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    failures = 0
+    with open(f"{out_dir}/oracle_sql.json") as f:
+        oracle = json.load(f)
+    failures = timeouts = 0
     for name, sql in sorted(oracle.items()):
         try:
             # NOTE: the oracle runs twice (fetchdf for values, .arrow()
-            # below for the schema) ON PURPOSE — arrow().to_pandas()
+            # for the schema) ON PURPOSE — arrow().to_pandas()
             # normalizes decimals/dates differently from fetchdf and
             # breaks the value compare, so the two reads are not fungible
-            want = con.execute(sql).fetchdf()
+            want = run_oracle(con, sql, lambda r: r.fetchdf())
+            warrow = run_oracle(con, sql, lambda r: r.arrow()).schema
+        except OracleTimeout:
+            print(f"ORACLE-TIMEOUT {name} (oracle ran past "
+                  f"{ORACLE_TIMEOUT_S} s; not checked)")
+            timeouts += 1
+            continue
         except Exception as e:
             print(f"FAIL {name}: oracle SQL error: {e}")
             failures += 1
@@ -62,7 +101,6 @@ def main(sf_dir, out_dir):
         # Arrow TYPE compare (the driver's hash is type-sensitive: a
         # decimal(28,2) vs decimal(38,2) mismatch fails it even when every
         # value is equal — round-1 judge finding)
-        warrow = con.execute(sql).arrow().schema
         gfile = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))[0]
         garrow = pq.read_schema(gfile)
         def tnorm(t):
@@ -125,8 +163,9 @@ def main(sf_dir, out_dir):
             failures += 1
         else:
             print(f"OK   {name} ({len(w)} rows)")
-    print(f"\n{len(oracle) - failures}/{len(oracle)} queries match")
-    return 1 if failures else 0
+    print(f"\n{len(oracle) - failures - timeouts}/{len(oracle)} queries "
+          f"match, {failures} fail, {timeouts} oracle-timeout")
+    return 1 if failures or timeouts else 0
 
 
 if __name__ == "__main__":

@@ -20,6 +20,52 @@ import java.nio.file.{Files, Paths}
   * build-tool log prefixes.
   */
 object Bench {
+  /** 2 Hz stack sampler of the JVM's RUNNABLE threads other than its own:
+    * per thread, the top `graft.` or `org.apache.spark` frame; [[finish]]
+    * stops it and returns the eight most-sampled frames with counts.
+    */
+  private[graft] final class StallSampler extends Thread {
+    setDaemon(true)
+    private val counts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
+    @volatile private var live = true
+    private def interesting(cn: String): Boolean =
+      cn.startsWith("org.apache.spark") || cn.startsWith("graft.")
+    override def run(): Unit = {
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      val self = getId // the sampler is RUNNABLE in every dump it takes
+      while (live) {
+        val infos = mx.dumpAllThreads(false, false)
+        var i = 0
+        while (i < infos.length) {
+          val ti = infos(i)
+          if (ti != null && ti.getThreadId != self &&
+              ti.getThreadState == Thread.State.RUNNABLE) {
+            val frames = ti.getStackTrace
+            var j = 0
+            var done = false
+            while (j < frames.length && !done) {
+              if (interesting(frames(j).getClassName)) {
+                counts.merge(frames(j).getClassName + "." + frames(j).getMethodName,
+                  1, (a, b) => a + b)
+                done = true
+              }
+              j += 1
+            }
+          }
+          i += 1
+        }
+        Thread.sleep(500)
+      }
+    }
+    def finish(): Seq[(String, Int)] = {
+      live = false
+      join(2000)
+      import scala.jdk.CollectionConverters._
+      counts.asScala.toSeq.map { case (k, v) => (k, v.intValue) }
+        .sortBy(-_._2).take(8)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -110,45 +156,6 @@ object Bench {
     // time (interpreted `*.eval` towers read completely differently from
     // first-run scan/codegen warm-up). Sampling cost is ~1 ms every
     // 500 ms — invisible next to any run worth profiling.
-    final class StallSampler extends Thread {
-      setDaemon(true)
-      private val counts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
-      @volatile private var live = true
-      private def interesting(cn: String): Boolean =
-        cn.startsWith("org.apache.spark") || cn.startsWith("graft.")
-      override def run(): Unit = {
-        val mx = java.lang.management.ManagementFactory.getThreadMXBean
-        while (live) {
-          val infos = mx.dumpAllThreads(false, false)
-          var i = 0
-          while (i < infos.length) {
-            val ti = infos(i)
-            if (ti != null && ti.getThreadState == Thread.State.RUNNABLE) {
-              val frames = ti.getStackTrace
-              var j = 0
-              var done = false
-              while (j < frames.length && !done) {
-                if (interesting(frames(j).getClassName)) {
-                  counts.merge(frames(j).getClassName + "." + frames(j).getMethodName,
-                    1, (a, b) => a + b)
-                  done = true
-                }
-                j += 1
-              }
-            }
-            i += 1
-          }
-          Thread.sleep(500)
-        }
-      }
-      def finish(): Seq[(String, Int)] = {
-        live = false
-        join(2000)
-        import scala.jdk.CollectionConverters._
-        counts.asScala.toSeq.map { case (k, v) => (k, v.intValue) }
-          .sortBy(-_._2).take(8)
-      }
-    }
     // query-name#runIndex -> (seconds, dominant frames with sample counts)
     val stallProfiles = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, Seq[(String, Int)])]

@@ -49,16 +49,24 @@ object Dedup {
     * On a lakehouse table format this would be `MERGE INTO`; on plain
     * parquet the caller overwrites the target partition-wise with the
     * result (write-then-swap, SURVEY.md §7.7).
+    *
+    * `clusterBy`, a column that is a function of `keys` (so it groups no
+    * two distinct keys together), re-keys the window's one exchange on it
+    * alone and leads the window's partition spec: the result leaves
+    * hash-clustered on that column and sorted by it, which is what a
+    * writer partitioned by it needs (one file per value, no writer sort).
     */
   def upsert(
       existing: DataFrame,
       incoming: DataFrame,
       keys: Seq[String],
       versionCol: String,
-      tiebreak: Seq[Column] = Nil): DataFrame = {
+      tiebreak: Seq[Column] = Nil,
+      clusterBy: Option[String] = None): DataFrame = {
     val tagged = existing.withColumn("__graft_src", lit(0))
       .unionByName(incoming.withColumn("__graft_src", lit(1)))
-    keepFirst(tagged, keys,
+    keepFirst(clusterBy.fold(tagged)(c => tagged.repartition(col(c))),
+      clusterBy.toSeq ++ keys,
       Seq(col(versionCol).desc, col("__graft_src").desc) ++ tiebreak)
       .drop("__graft_src")
   }

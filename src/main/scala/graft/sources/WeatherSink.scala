@@ -33,6 +33,15 @@ object WeatherSink {
     * its own partitions' IO whatever the history behind it; untouched
     * partitions keep their files.
     *
+    * The merge keys its one exchange on `date` alone (`clusterBy`), so
+    * each touched date is written by one task as one file, and the
+    * window's sort on (`date`, key, version) already orders the rows for
+    * the partitioned writer, which then sorts nothing. Two writes keep
+    * Spark's plain plan, because clustering them would cost one more
+    * exchange: a batch that touches no stored date, and the first load
+    * ([[write]]). Each of their tasks writes one file into every date it
+    * holds.
+    *
     * Commit: Spark writes the touched partitions to a staging directory,
     * then deletes each touched `date=…` directory and renames its new
     * files in. That is not the reference's single transaction with
@@ -51,8 +60,10 @@ object WeatherSink {
       .collect().map(_.getString(0)).toSeq
     val merged = readDates(spark, path, dates) match {
       case None => incoming
+      // `date` = to_date(data_timestamp), so clustering on it keys the
+      // same rows together
       case Some(stored) => Dedup.upsert(stored, incoming, naturalKey,
-        versionCol = "extraction_timestamp")
+        versionCol = "extraction_timestamp", clusterBy = Some("date"))
     }
     // per-write dynamic mode, not a session-conf toggle that concurrent
     // writers could interleave
@@ -75,15 +86,16 @@ object WeatherSink {
       .parquet(dirs.map(_.toString): _*))
   }
 
-  /** Compact the table's small files: each upsert rewrites its touched
-    * partitions as up to `shuffle.partitions` files per date, and a year
-    * of daily batches leaves KB-sized files whose open/footer overhead
-    * dominates scans at 100 TB. Rewrites the table to ≈ `targetFileBytes`
-    * per file (estimated from current on-disk size) into a staging
-    * directory and swaps it in with two renames (`<path>` → `.__old__`,
-    * `.__staging__` → `<path>`); rows are hash-distributed on the
-    * partition column so each date directory compacts toward a single
-    * file. A crash between the renames leaves only `.__old__`, which the
+  /** Compact the table's small files: [[upsertInto]]'s merge writes one
+    * file per touched date, but the first load and a batch that touches
+    * no stored date write up to one file per task into each date, and a
+    * year of daily batches leaves KB-sized files whose open/footer
+    * overhead dominates scans at 100 TB. Rewrites the table to
+    * ≈ `targetFileBytes` per file (estimated from current on-disk size)
+    * into a staging directory and swaps it in with two renames
+    * (`<path>` → `.__old__`, `.__staging__` → `<path>`); rows are
+    * hash-distributed on the partition column so each date directory
+    * compacts toward a single file. A crash between the renames leaves only `.__old__`, which the
     * next [[compact]] or [[upsertInto]] restores.
     */
   def compact(spark: SparkSession, path: String,

@@ -2,7 +2,15 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Final => FinalLimit, WindowExec,
+  WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.ingest.Fixtures
@@ -13,12 +21,13 @@ import graft.sources.WeatherSink
 
 class WeatherPipelineSpec extends SparkSpec {
 
-  private def transformed(docs: String*) = {
-    val raw = Fixtures.df(spark, docs: _*)
-    WeatherTransform.transform(
-      graft.ingest.WeatherIngest.flatten(raw, WeatherModel.regionDim(spark),
-        extractionTime = to_timestamp(lit("2023-11-15 06:00:00"))))
-  }
+  /** `docs` flattened and transformed, extracted at `extractedAt`. */
+  private def rowsOf(extractedAt: String, docs: Seq[String]) =
+    WeatherTransform.transform(graft.ingest.WeatherIngest.flatten(
+      Fixtures.df(spark, docs: _*), WeatherModel.regionDim(spark),
+      extractionTime = to_timestamp(lit(extractedAt))))
+
+  private def transformed(docs: String*) = rowsOf("2023-11-15 06:00:00", docs)
 
   test("transform drops out-of-range temperature rows (T2) and derives all columns") {
     val got = transformed(Fixtures.full, Fixtures.hotOutlier)
@@ -59,11 +68,7 @@ class WeatherPipelineSpec extends SparkSpec {
     * extracted at `extractedAt`.
     */
   private def reading(dt: Long, temp: Double, extractedAt: String) =
-    WeatherTransform.transform(graft.ingest.WeatherIngest.flatten(
-      Fixtures.df(spark, Fixtures.full.replace("1700000000", dt.toString)
-        .replace("\"temp\":22.5", s"\"temp\":$temp")),
-      WeatherModel.regionDim(spark),
-      extractionTime = to_timestamp(lit(extractedAt))))
+    rowsOf(extractedAt, Seq(doc("Nakuru", dt, temp)))
 
   /** Every parquet file under `dir` whose path contains `part`, with mtime. */
   private def filesOf(dir: String, part: String) = {
@@ -104,6 +109,118 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(table.count() === 5)
     assert(sortedRows(table) ===
       sortedRows(expected.select(table.columns.map(col): _*)))
+  }
+
+  /** `confs` set for the duration of `body`, then restored. */
+  private def withSQLConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private val midnight = 1699920000L // 2023-11-14T00:00:00Z
+  private val threeRegions = Seq("Nakuru", "Meru", "Eldoret")
+
+  /** Three regions at hours 0-3 of day `k` after 2023-11-14, `temp` + hour. */
+  private def dayDocs(k: Int, temp: Double) =
+    for (r <- threeRegions; h <- 0 until 4)
+      yield doc(r, midnight + k * day + h * 3600, temp + h)
+
+  test("upsertInto writes each touched date as one file") {
+    val dir = Files.createTempDirectory("graft_cluster").toString + "/t"
+    // stored: 2023-11-14 .. 2023-11-17, 12 rows each
+    WeatherSink.write(
+      rowsOf("2023-11-20 06:00:00", (0 until 4).flatMap(dayDocs(_, 20.0))), dir)
+    val before = spark.read.parquet(dir)
+    val beforeDf = spark.createDataFrame(
+      java.util.Arrays.asList(before.collect(): _*), before.schema)
+    val untouchedDates = Seq("2023-11-14", "2023-11-15")
+    val untouched = untouchedDates.map(d => filesOf(dir, s"date=$d"))
+    assert(untouched.forall(_.nonEmpty))
+    // re-extractions of every 11-16 key, late readings for 11-17 and two
+    // new dates, 11-18 and 11-19
+    val batch = rowsOf("2023-11-21 06:00:00", dayDocs(2, 25.0) ++
+      threeRegions.map(doc(_, midnight + 3 * day + 5 * 3600, 30.0)) ++
+      dayDocs(4, 21.0) ++ dayDocs(5, 22.0))
+    // enough uncoalesced shuffle partitions that a merge keyed on anything
+    // finer than `date` scatters a date over several tasks
+    withSQLConf("spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      WeatherSink.upsertInto(spark, batch, dir)
+    }
+    for (d <- 16 to 19) {
+      val files = filesOf(dir, s"date=2023-11-$d")
+      assert(files.size === 1, s"2023-11-$d: ${files.mkString(", ")}")
+    }
+    assert(untouchedDates.map(d => filesOf(dir, s"date=$d")) === untouched,
+      "untouched partitions must not be rewritten")
+    val table = spark.read.parquet(dir)
+    val expected = Dedup.upsert(beforeDf, batch, WeatherSink.naturalKey,
+      versionCol = "extraction_timestamp")
+    assert(table.count() === 48 + 3 + 24)
+    assert(sortedRows(table) ===
+      sortedRows(expected.select(table.columns.map(col): _*)))
+  }
+
+  /** `p`'s children, looking through AQE's wrapper and its query stages. */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case _ => p.children
+  }
+
+  /** The nodes from `p` down to the first node that is a `T`, root first. */
+  private def pathTo[T <: SparkPlan: scala.reflect.ClassTag](p: SparkPlan)
+      : Option[Seq[SparkPlan]] = p match {
+    case _: T => Some(Seq(p))
+    case _ => kids(p).iterator.map(pathTo[T]).collectFirst {
+      case Some(path) => p +: path
+    }
+  }
+
+  test("the merge write clusters on date: one exchange above the union, no writer sort") {
+    val dir = Files.createTempDirectory("graft_plan").toString + "/t"
+    WeatherSink.write(rowsOf("2023-11-20 06:00:00", dayDocs(0, 20.0)), dir)
+    // a stored date and a new one, so the merge path is taken
+    val batch = rowsOf("2023-11-21 06:00:00", dayDocs(0, 25.0) ++ dayDocs(1, 21.0))
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (pathTo[DataWritingCommandExec](qe.executedPlan).nonEmpty)
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception)
+          : Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      WeatherSink.upsertInto(spark, batch, dir)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size === 1, "expected one write")
+    val write = writes.peek()
+    val toUnion = pathTo[UnionExec](write).get
+    val exchanges = toUnion.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1, write.toString)
+    exchanges.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.flatMap(_.references.map(_.name)) === Seq("date"),
+          write.toString)
+      case other => fail(s"merge exchange is $other, not hash on date")
+    }
+    // the window's partial WindowGroupLimit does not survive the re-key:
+    // with no exchange between them Spark drops the partial limit, so the
+    // merge prunes no rows before its shuffle (its inputs hold one row per
+    // key already: a stored table and a deduplicated batch)
+    assert(toUnion.collect { case w: WindowGroupLimitExec => w.mode } ===
+      Seq(FinalLimit), write.toString)
+    val toWindow = pathTo[WindowExec](write).get
+    assert(!toWindow.exists(_.isInstanceOf[SortExec]),
+      s"a sort between the window and the write:\n$write")
   }
 
   test("an interrupted compact swap is restored, not overwritten") {
