@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every registered query at
@@ -68,75 +67,21 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Scale-validation knobs (driver never sets these, so the driver
     // contract — 3 runs, every query — is unchanged): SPARK_GRAFT_RUNS
     // trims repeats for long sf1 sweeps; SPARK_GRAFT_ONLY=q26,q99 runs a
     // prefix-matched subset.
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // r14: shuffle/block-manager local dirs route to tmpfs under the
-    // same guarded policy as Scratch.fastDir — see
-    // Scratch.sparkLocalDir's scaladoc for the measured mechanism
-    // (O(maps × reducers) shuffle temp-file creates on a disk whose
-    // per-op latency swings 0.5-11 ms between runs). The decision is
-    // embedded in bench.json as "local_dir" so a cross-round delta can
-    // be attributed from the artifact.
-    // r15: the conf comes from localDirSparkConf and the SparkContext is
-    // built from it DIRECTLY (not via the session builder, which copies
-    // settings into a fresh SparkConf) — when the launch environment
-    // exports SPARK_LOCAL_DIRS pointing at the slow disk, the returned
-    // conf masks that env read so spark.local.dir wins. The round-14
-    // driver ran with SPARK_LOCAL_DIRS=/tmp/spark-local and the whole
-    // tmpfs routing was silently bypassed (249 s vs 158 s suite).
-    val (coreConf, localDir, localDirDetail) = Scratch.localDirSparkConf(sfDir)
-    coreConf
-      .setMaster(s"local[$cpus]")
-      .setAppName("graft-bench")
-      .set("spark.sql.shuffle.partitions", cpus)
-      .set("spark.sql.session.timeZone", "UTC")
-      .set("spark.ui.enabled", "false")
-      // r13 (CheckpointProbe adjudication of the r12 q132/q187 bench
-      // regression): Spark 4.1 defaults the checksum checkpoint file
-      // manager ON, which doubles every streaming-metadata
-      // create/hsync/rename; on this host's disk-backed tmpdir that
-      // cycle measures 3.0 ms mean / 15.9 ms p99 under load and q132
-      // ran [23.0, 9.0, 7.7] s with checksums vs [4.7, 4.2, 4.0] s
-      // without. Replay-harness checkpoints live for one AvailableNow
-      // run and are reaped — corruption detection on them buys
-      // nothing. Production deployments with durable checkpoints
-      // should keep the Spark default.
-      .set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    // NOTE (measured, do not "optimize"): AQE's
-    // coalescePartitions.parallelismFirst default (true) is correct
-    // here — size-based coalescing (false) packed the CPU-heavy
-    // window/percentile queries into 1-2 post-shuffle partitions at
-    // bench SFs (rows are small, work per row is not) and q18/q38
-    // regressed ~2-3×. Advisory-size coalescing only helps when
-    // bytes, not compute, dominate.
-    org.apache.spark.SparkContext.getOrCreate(coreConf)
-    val spark = SparkSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The engine's unpartitioned-window call sites are all grid-sized
-    // by construction (enforced by PlanAuditSpec, not by reading logs),
-    // but WindowExec WARNs "No Partition Defined" on every execution —
-    // hundreds of lines per suite that drowned the ONE diagnostic line
-    // that mattered in r10 (the failed query's error). The spec is the
-    // invariant's guardian; the logger is noise here.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // Pre-suite device probe (r14, VERDICT item 4): measure the
-    // create+hsync+rename cycle — the streaming-checkpoint metadata
-    // pattern — on both candidate scratch roots and embed the numbers
-    // in bench.json, so a cross-round perf delta can be split into
-    // "code changed" vs "host disk changed" from the artifact alone
-    // (the r12→r13 adjudication needed three manual runs for this).
-    // 200 cycles ≈ 0.1 s on a healthy disk — noise next to the suite.
+    // The local-dir decision (tmpfs vs disk, see Scratch.sparkLocalDir)
+    // is embedded in bench.json as "local_dir" so a cross-round delta
+    // can be attributed from the artifact.
+    val (spark, localDir, localDirDetail) = Harness.session("graft-bench", sfDir)
+    // Pre-suite device probe on both candidate scratch roots (see
+    // Harness.diskProbe); 200 cycles ≈ 0.1 s on a healthy disk.
     def probeRoot(dir: java.io.File): Option[(Double, Double)] =
       if (dir.isDirectory && dir.canWrite)
-        try Some(graft.tools.CheckpointProbe.fsyncRenameBench(
-          new java.io.File(dir, "graft_bench_probe"), 200))
+        try Some(Harness.diskProbe(new java.io.File(dir, "graft_bench_probe"), 200))
         catch { case _: Throwable => None }
       else None
     val probeDisk = probeRoot(
@@ -166,16 +111,11 @@ object Bench {
     // bench.json's "errors" map: r10's single bench failure was
     // undiagnosable post-hoc because the message went only to stderr,
     // whose harness-kept tail was warning spam.
-    // SPARK_GRAFT_NOSAMPLER=1 disables the stall sampler (driver never
-    // sets it): the r12→r13 drift adjudication needs one controlled run
-    // with the sampler out of the picture to bound its overhead from
-    // the artifact side (its design cost is ~1 ms per 500 ms).
-    val noSampler = sys.env.get("SPARK_GRAFT_NOSAMPLER").contains("1")
     def once(name: String, runIdx: Int,
         fn: (org.apache.spark.sql.SparkSession, String)
         => org.apache.spark.sql.DataFrame): (Double, Boolean, Option[String]) = {
-      val sampler = if (noSampler) null else new StallSampler
-      if (sampler != null) sampler.start()
+      val sampler = new StallSampler
+      sampler.start()
       val t0 = System.nanoTime()
       val err: Option[String] =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
@@ -189,17 +129,15 @@ object Bench {
           Some(msg)
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      if (sampler != null) {
-        val profile = sampler.finish()
-        // keep the 15 SLOWEST profiled runs, not the first 15 (r13:
-        // the sf10r sweep's early 5-10 s runs filled the buffer before
-        // the 200-400 s rows it exists to explain arrived)
-        if (sec >= 5.0) {
-          stallProfiles(s"$name#$runIdx") = (sec, profile)
-          if (stallProfiles.size > 15) {
-            val evict = stallProfiles.minBy(_._2._1)._1
-            stallProfiles.remove(evict)
-          }
+      val profile = sampler.finish()
+      // keep the 15 SLOWEST profiled runs, not the first 15 (r13:
+      // the sf10r sweep's early 5-10 s runs filled the buffer before
+      // the 200-400 s rows it exists to explain arrived)
+      if (sec >= 5.0) {
+        stallProfiles(s"$name#$runIdx") = (sec, profile)
+        if (stallProfiles.size > 15) {
+          val evict = stallProfiles.minBy(_._2._1)._1
+          stallProfiles.remove(evict)
         }
       }
       (sec, err.isEmpty, err)
@@ -317,37 +255,19 @@ object Bench {
     val compileMs =
       if (comp != null && comp.isCompilationTimeMonitoringSupported) comp.getTotalCompilationTime
       else -1L
-    // r12 (ADVICE): escape EVERY control char, not just \n\r\t — an
-    // exception message carrying \f or a raw ANSI escape byte would
-    // otherwise land unescaped in bench.json's errors map and make the
-    // whole artifact unparseable, defeating the post-hoc diagnosability
-    // the errors map exists to provide.
-    def jstr(s: String): String = {
-      val sb = new StringBuilder("\"")
-      s.foreach {
-        case '\\' => sb.append("\\\\")
-        case '"'  => sb.append("\\\"")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      sb.append("\"").toString
-    }
     // Per-run failure messages — the r10 gap: a failed bench row was
     // undiagnosable from the artifact alone.
     val errsJson = results.flatMap { case (k, runs) =>
       runs.zipWithIndex.collect { case ((_, false, Some(msg)), i) =>
-        "\"" + k + "#" + i + "\":" + jstr(msg.take(500))
+        "\"" + k + "#" + i + "\":" + Json.str(msg.take(500))
       }
     }.mkString("{", ",", "}")
     val stallsJson = stallProfiles.map { case (key, (sec, frames)) =>
-      jstr(key) + ":{\"sec\":" + f(sec) + ",\"frames\":{" +
-        frames.map { case (fr, n) => jstr(fr) + ":" + n }.mkString(",") + "}}"
+      Json.str(key) + ":{\"sec\":" + f(sec) + ",\"frames\":{" +
+        frames.map { case (fr, n) => Json.str(fr) + ":" + n }.mkString(",") + "}}"
     }.mkString("{", ",", "}")
     val strategiesJson = strategies.map { case (q, ds) =>
-      jstr(q) + ":[" + ds.map(jstr).mkString(",") + "]"
+      Json.str(q) + ":[" + ds.map(Json.str).mkString(",") + "]"
     }.mkString("{", ",", "}")
     val diskProbeJson = {
       def block(p: Option[(Double, Double)]): String = p match {
@@ -358,7 +278,7 @@ object Bench {
       s"""{"tmpdir":${block(probeDisk)},"shm":${block(probeShm)}}"""
     }
     val localDirJson =
-      s"""{"path":${jstr(localDir)},"detail":${jstr(localDirDetail)}}"""
+      s"""{"path":${Json.str(localDir)},"detail":${Json.str(localDirDetail)}}"""
     val line =
       s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"runs":$runsJson,"errors":$errsJson,"stalls":$stallsJson,"strategies":$strategiesJson,"jit":{"compile_ms":$compileMs,"code_cache_full":$codeCacheFull,"pools":$poolsJson},"disk_probe":$diskProbeJson,"local_dir":$localDirJson,"failed":$failed,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("bench.json"), line + "\n")
@@ -378,7 +298,7 @@ object Bench {
     // 2000-char tail can afford one short message when failed > 0).
     val errBit = if (failed > 0) {
       val first = results.flatMap { case (k, runs) =>
-        runs.collectFirst { case (_, false, Some(m)) => jstr(s"$k: ${m.take(160)}") }
+        runs.collectFirst { case (_, false, Some(m)) => Json.str(s"$k: ${m.take(160)}") }
       }.take(2).mkString("[", ",", "]")
       s""","errors_sample":$first"""
     } else ""

@@ -400,7 +400,7 @@ object Queries {
     // pushdown — pre-aggregating lineitem per l_orderkey below the
     // join, legal because the final grouping key is functionally
     // determined by the join key — was implemented and MEASURED at
-    // sf10r (TimeQuery, local[16], same host, same data): pushdown
+    // sf10r (standalone timing, local[16], same host, same data): pushdown
     // min-of-3 11.1 s / 14.4 s across two sessions vs 8.0 s for this
     // plain shape. It lost because the ~15M-group pre-aggregate (hash
     // map built twice: partial + final) costs more than the exchange
@@ -1049,12 +1049,12 @@ object Queries {
           "image/png", "synth")), dim)
     // r9 (planes → IVF): the r9 autoPlanes derivation held EXPECTED
     // occupancy constant, but the sf10 sweep measured the sign-pattern
-    // buckets catastrophically SKEWED on image embeddings (Q102Skew at
-    // sf1: 485 of 4096 buckets occupied, max occupancy 8012 vs uniform
-    // 37 — pHash+histogram features concentrate in few orthants, and
-    // more hyperplanes cannot split a dense orthant), so the bucket
-    // join paid ~750 of q102's 682-in-suite seconds at sf10
-    // (Q102Probe). Generator swapped to the data-ADAPTIVE IVF coarse
+    // buckets catastrophically SKEWED on image embeddings (BASELINE.md
+    // q102 deep-dive: at sf1 485 of 4096 buckets occupied, max occupancy
+    // 8012 vs uniform 37 — pHash+histogram features concentrate in few
+    // orthants, and more hyperplanes cannot split a dense orthant), so
+    // the bucket join paid ~750 of q102's 682-in-suite seconds at sf10
+    // (same record). Generator swapped to the data-ADAPTIVE IVF coarse
     // quantizer: k-means cells track the embedding DISTRIBUTION, nlist
     // = autoNlist ≈ √N, centroids trained once per corpus fingerprint
     // and reused (the q96 store regime); nprobe = 1 rides the
@@ -5136,7 +5136,7 @@ object Queries {
       .select(col("event_id"), col("ts_ns"), col("user_id"),
         col("event_type"), col("value"))
     // Per-run unique state dir: a fixed path raced when two harness
-    // processes (e.g. Verify + an ad-hoc TimeQuery) ran q90 at once —
+    // processes (e.g. Verify + an ad-hoc Dev run) ran q90 at once —
     // one clobbered the other's ping-pong state mid-replay. deleteOnExit
     // is best-effort cleanup at JVM shutdown (the returned DataFrame
     // still reads the files lazily, so deleting eagerly here would
@@ -7245,7 +7245,7 @@ object Queries {
       .where(col("value").isNotNull)
     // KB-scale sketch store on the fast (tmpfs-preferred) root: the
     // r12 bench host's disk ran small-parquet create/rename at 3-16 ms
-    // per op (CheckpointProbe), and this store is 31 tiny files
+    // per op (BASELINE.md, Round-13 records), and this store is 31 tiny files
     val store = kllStoreDir("q158")
     ev.groupBy(col("day"))
       .agg(Sketches.kllSketch(col("value"), 800).as("sk"))

@@ -125,7 +125,7 @@ object Scratch {
   /** [[fastDir]] with a `_cp` name infix: STREAMING-CHECKPOINT scratch.
     *
     * Why checkpoints specifically need the fast root (r13, adjudicated
-    * by `tools.CheckpointProbe`; superseded diagnosis in r14 —
+    * in BASELINE.md's Round-13 records; superseded diagnosis in r14 —
     * [[graft.streaming.LocalNioCheckpointFileManager]]): every
     * streaming micro-batch commits offset/commit metadata and
     * state-store deltas through create-temp → hsync → rename. Replay

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,25 +9,9 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same guarded tmpfs local-dir routing as Bench (r14; r15 masks an
-    // env SPARK_LOCAL_DIRS that loses the policy decision — see
-    // Scratch.localDirSparkConf) — placement only, results unaffected;
-    // spares the correctness dump from the disk tmpdir's
-    // degraded-latency windows
-    val (coreConf, _, _) = Scratch.localDirSparkConf(sfDir)
-    coreConf
-      .setMaster(s"local[$cpus]")
-      .setAppName("graft-verify")
-      .set("spark.sql.shuffle.partitions", cpus)
-      .set("spark.sql.session.timeZone", "UTC")
-      .set("spark.ui.enabled", "false")
-      // Ephemeral replay checkpoints don't need corruption detection;
-      // see the Bench builder's r13 note (CheckpointProbe numbers).
-      .set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    org.apache.spark.SparkContext.getOrCreate(coreConf)
-    val spark = SparkSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // same session as Bench, including its guarded tmpfs local-dir
+    // routing (placement only, results unaffected)
+    val (spark, _, _) = Harness.session("graft-verify", sfDir)
     new java.io.File(outDir).mkdirs()
     // Physical-strategy decisions per query (r12) — see StrategyLog;
     // dumped as strategies.json so a sparse/dense mis-cutover is
@@ -53,24 +36,12 @@ object Verify {
         // scratch is garbage here by construction.
         Scratch.reap()
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val stratJson = strategies.map { case (k, ds) =>
-      s"${q(k)}: [${ds.map(q).mkString(",")}]"
+      s"${Json.str(k)}: [${ds.map(Json.str).mkString(",")}]"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/strategies.json"), stratJson)
     spark.stop()

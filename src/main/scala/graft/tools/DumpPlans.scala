@@ -2,11 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: regenerate PLANS.md from the ACTUAL executed plans of the
   * showcase queries, so the documented plans cannot drift from the code.
-  * Run: `sbt "runMain graft.tools.DumpPlans"` (writes ./PLANS.md).
+  * Run: `SPARK_GRAFT_CPUS=8 sbt "runMain graft.tools.DumpPlans"` (writes
+  * ./PLANS.md; the committed plans were captured at 8 cores).
   */
 object DumpPlans {
 
@@ -221,13 +220,7 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (spark, _, _) = graft.Harness.session("graft-dumpplans", dir)
     val sb = new StringBuilder
     sb.append("# PLANS — executed physical plans of showcase queries\n\n")
     sb.append("Generated by `graft.tools.DumpPlans` against `")

@@ -32,7 +32,7 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * sort). Dimension-sized tables are left at 1 file: splitting a
   * 25-row table buys nothing and costs 31 empty-file opens.
   *
-  * Usage: `sbt "runMain graft.tools.Relayout [srcDir dstDir parts]"`
+  * Usage: `SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.Relayout [srcDir dstDir parts]"`
   * (defaults: target/sf10 → target/sf10r, 32).
   */
 object Relayout {
@@ -47,14 +47,7 @@ object Relayout {
     val src = if (args.length > 0) args(0) else "target/sf10"
     val dst = if (args.length > 1) args(1) else "target/sf10r"
     val parts = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-relayout")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, _, _) = graft.Harness.session("graft-relayout", src)
     run(spark, src, dst, parts)
     spark.stop()
   }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * join — one distributed pass per table, no driver-side rows beyond the
   * per-table max-key scalars.
   *
-  * Usage: `sbt "runMain graft.tools.ScaleUp [srcDir dstDir factor]"`
+  * Usage: `SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp [srcDir dstDir factor]"`
   * (defaults: /root/testdata/sf0.1 → target/sf1, 10×).
   */
 object ScaleUp {
@@ -57,14 +57,7 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "target/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scaleup")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, _, _) = graft.Harness.session("graft-scaleup", src)
     run(spark, src, dst, factor)
     spark.stop()
   }

@@ -12,9 +12,9 @@ import graft.SparkSpec
   *  - payload + embedding distinctness across the OLD collision
   *    periods (the exact regression);
   *  - embedding distinctness sweeps over contiguous id ranges (the
-  *    in-suite slice; `tools/SynthDistinct` runs the full sf10 ranges
-  *    — 100k suppliers, 1.5M customers — out of suite and the result
-  *    is recorded in BASELINE.md);
+  *    in-suite slice; the full sf10 ranges — 100k suppliers, 1.5M
+  *    customers — were swept out of suite, all distinct, as recorded
+  *    in ROUND11.md);
   *  - metadata-only re-encode twins keep BIT-IDENTICAL embeddings
   *    (the other half of the oracle argument).
   */
@@ -72,7 +72,7 @@ class SynthMediaSpec extends SparkSpec {
   }
 
   test("audio embeddings are pairwise distinct over a contiguous id range") {
-    val n = 20000L // covers sf1's 10k suppliers; SynthDistinct covers sf10
+    val n = 20000L // covers sf1's 10k suppliers; ROUND11.md records sf10
     val cnt = spark.range(1L, n + 1).as[Long]
       .map(SynthMediaSpecFns.audioKey _)
       .distinct().count()
