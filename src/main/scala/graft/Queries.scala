@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.WeatherFunctions
 import graft.functions.{TextFeatures, TextFunctions}
-import graft.operators.{AsOfJoin, Bloom, Decontam, Dedup, Funnel, Graph, Incremental, Multimodal, Percentiles, Quantize, RangeJoin, Repetition, Resample, Retrieval, Sampling, Scd, Similarity, Skew, SubstringDedup, TextChunker, TextDedup}
+import graft.operators.{AsOfJoin, Bloom, Decontam, Dedup, Funnel, Graph, Incremental, Multimodal, Percentiles, Quantize, RangeJoin, Repetition, Resample, Retrieval, Sampling, Scd, Similarity, Skew, SubstringDedup, TextChunker, TextDedup, WeatherTransform}
 
 /** The oracle-checked query surface: every operator from SURVEY.md §2
   * exposed as a named query over the driver's parquet tables, with
@@ -521,7 +521,10 @@ object Queries {
     * region := user_id mod 15, temperature := value mod 55 - 5,
     * humidity := floor(value) mod 101, rainfall := value mod 60.
     * Exercises dedup, validity filters, both scalar formulas, both flags,
-    * the CASE buckets and all date parts in a single plan.
+    * the CASE buckets and all date parts in a single plan. T2-T9 are the
+    * pipeline's own [[WeatherTransform.validityFilter]] and
+    * [[WeatherTransform.derive]], so the oracle checks the module the
+    * pipeline runs.
     */
   def q20WeatherPipeline(s: SparkSession, dir: String): DataFrame = {
     val raw = events(s, dir).select(
@@ -534,24 +537,13 @@ object Queries {
       (col("value") % 60.0).as("rainfall_1h"))
     val deduped = Dedup.keepFirst(raw, Seq("region", "data_ts_ns"),
       Seq(col("record_id").asc))
-    val valid = deduped
-      .filter(col("temperature").between(-5, 50))
-      .filter(col("humidity").between(0, 100))
-    valid.select(
+    WeatherTransform.derive(WeatherTransform.validityFilter(deduped)).select(
       col("record_id"), col("region"), col("temperature"), col("humidity"),
-      WeatherFunctions.heatIndex(col("temperature"), col("humidity"))
-        .as("heat_index"),
-      WeatherFunctions.dewPoint(col("temperature"), col("humidity"))
-        .as("dew_point"),
-      WeatherFunctions.isFavorableTemp(col("temperature"))
-        .as("is_favorable_temp"),
-      WeatherFunctions.isHighHumidity(col("humidity")).as("is_high_humidity"),
-      WeatherFunctions.rainfallCategory(col("rainfall_1h"))
-        .as("rainfall_category"),
-      to_date(col("data_timestamp")).as("date"),
-      hour(col("data_timestamp")).cast("long").as("hour"),
-      month(col("data_timestamp")).cast("long").as("month"),
-      year(col("data_timestamp")).cast("long").as("year"))
+      col("heat_index"), col("dew_point"), col("is_favorable_temp"),
+      col("is_high_humidity"), col("rainfall_category"), col("date"),
+      col("hour").cast("long").as("hour"),
+      col("month").cast("long").as("month"),
+      col("year").cast("long").as("year"))
       .orderBy(col("record_id"))
   }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
@@ -87,14 +87,6 @@ object WeatherPipeline {
       case _ => throw notConstant(null)
     }
   }
-
-  /** Pure (no sink) variant: documents DataFrame in, analytical table out.
-    * This is the composition the oracle queries exercise.
-    */
-  def transformOnly(raw: DataFrame, spark: SparkSession,
-      extractionTime: Column = current_timestamp()): DataFrame =
-    WeatherTransform.transform(
-      WeatherIngest.flatten(raw, WeatherModel.regionDim(spark), extractionTime))
 
   /** The reference DAG's operational retry/alert envelope
     * (daily_weather_etl_kenya.py:50-53: 2 retries, 5-minute delay,

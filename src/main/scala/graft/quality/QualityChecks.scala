@@ -12,35 +12,13 @@ import org.apache.spark.sql.functions._
   * analog is the caller's: `WeatherPipeline.run` hands in only the
   * checked date's partition directory, because a filtered read of the
   * whole table prunes the other dates' files but still lists every
-  * `date=…` directory. Each check is one small aggregate job with a
-  * map-side partial.
+  * `date=…` directory. The three checks are one small aggregate job with
+  * a map-side partial ([[report]]).
   *
   * As in the reference, failed expectations WARN, they do not fail the
   * pipeline (py:496/513/529 use logging.warning).
   */
 object QualityChecks {
-
-  /** A1 (py:482-498): distinct regions reporting on a date. Exact count —
-    * the domain is 15 values, `approx_count_distinct` would be overkill.
-    */
-  def regionCompleteness(df: DataFrame, onDate: Column): DataFrame =
-    df.filter(col("date") === onDate)
-      .agg(countDistinct(col("region")).as("region_count"))
-
-  /** A2 (py:500-515): conditional null counts for the critical measures
-    * (`SUM(CASE WHEN col IS NULL THEN 1 ELSE 0 END)` per column, one pass).
-    */
-  def nullCounts(df: DataFrame, onDate: Column,
-      cols: Seq[String] = Seq("temperature", "humidity", "pressure")): DataFrame = {
-    val aggs = cols.map(c => count(when(col(c).isNull, lit(1))).as(s"nulls_$c"))
-    df.filter(col("date") === onDate).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** A3 (py:517-531): temperature extremes on a date. */
-  def temperatureRange(df: DataFrame, onDate: Column): DataFrame =
-    df.filter(col("date") === onDate)
-      .agg(min(col("temperature")).as("min_temp"),
-        max(col("temperature")).as("max_temp"))
 
   /** Structured result of the full quality stage. */
   final case class Report(
@@ -67,7 +45,11 @@ object QualityChecks {
   }
 
   /** Run all three checks in ONE aggregate job (the reference issues three
-    * separate queries; fusing them is free on Spark and scans once).
+    * separate queries; fusing them is free on Spark and scans once):
+    * A1 (py:482-498) distinct regions reporting on the date, an exact
+    * count because the domain is 15 values; A2 (py:500-515) conditional
+    * null counts of the critical measures; A3 (py:517-531) temperature
+    * extremes.
     */
   def report(df: DataFrame, onDate: Column,
       expectedRegions: Int = 15,

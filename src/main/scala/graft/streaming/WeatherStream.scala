@@ -20,12 +20,13 @@ import graft.sources.WeatherSink
   *  - T1 dedup → `dropDuplicatesWithinWatermark` on the natural key:
   *    state is bounded by the watermark instead of growing forever
   *  - A1/A3 quality → windowed event-time aggregation with watermark
-  *  - S8 upsert sink → `foreachBatch` calling the batch upsert: each
-  *    micro-batch merges into the date partitions it touches, and a
-  *    replayed batch merges to the same rows, giving last-writer-wins per
-  *    key on top of at-least-once delivery. The merge is not
-  *    transactional: a crash inside its commit can lose the touched
-  *    partitions (see [[WeatherSink.upsertInto]])
+  *  - S8 upsert sink → `foreachBatch` calling the batch upsert, the
+  *    table's one write: every micro-batch, the first into an empty table
+  *    included, merges into the date partitions it touches and leaves one
+  *    file per touched date, and a replayed batch merges to the same rows,
+  *    giving last-writer-wins per key on top of at-least-once delivery.
+  *    The merge is not transactional: a crash inside its commit can
+  *    lose the touched partitions (see [[WeatherSink.upsertInto]])
   */
 object WeatherStream {
 

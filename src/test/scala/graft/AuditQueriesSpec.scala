@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Closed-form fixtures for the round-9 batch-4 queries (q168+). The
@@ -10,11 +8,11 @@ import org.apache.spark.sql.functions._
   * the md5-60 geo assignment against an independent JVM reimplementation,
   * exact Benford ppm arithmetic, and weighted-ticket sampling monotonics.
   */
-class AuditQueriesSpec extends SparkSpec {
+class AuditQueriesSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def fixtureDir(): String =
-    Files.createTempDirectory("graft_auditfix").toString
+    tempDir("graft_auditfix").toString
 
   private def jl(v: Long): java.lang.Long = java.lang.Long.valueOf(v)
 

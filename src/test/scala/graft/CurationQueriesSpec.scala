@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -14,11 +13,11 @@ import org.apache.spark.sql.functions._
   *     same feed produce the identical key set, equal to the batch
   *     DISTINCT.
   */
-class CurationQueriesSpec extends SparkSpec {
+class CurationQueriesSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def fixtureDir(): String =
-    Files.createTempDirectory("graft_curfix").toString
+    tempDir("graft_curfix").toString
 
   test("q133 vote tie-break: votes desc, then best rank, then label") {
     val dir = fixtureDir()

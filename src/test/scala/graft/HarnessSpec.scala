@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,40 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class HarnessSpec extends AnyFunSuite {
 
-  /** `src` with comments and string/char literals removed, so only code
-    * is searched (a scaladoc example may show a builder call). */
-  private def codeOnly(src: String): String = {
-    val out = new StringBuilder
-    val n = src.length
-    var i = 0
-    def at(s: String) = src.startsWith(s, i)
-    while (i < n) {
-      if (at("//")) while (i < n && src(i) != '\n') i += 1
-      else if (at("/*")) {
-        var depth = 0
-        do {
-          if (at("/*")) { depth += 1; i += 2 }
-          else if (at("*/")) { depth -= 1; i += 2 }
-          else i += 1
-        } while (depth > 0 && i < n)
-      } else if (at("\"\"\"")) {
-        i += 3
-        while (i < n && !at("\"\"\"")) i += 1
-        i += 3
-      } else if (src(i) == '"') {
-        i += 1
-        while (i < n && src(i) != '"') i += (if (src(i) == '\\') 2 else 1)
-        i += 1
-      } else if (at("'\\")) {
-        i += 2
-        while (i < n && src(i) != '\'') i += 1
-        i += 1
-      } else if (src(i) == '\'' && i + 2 < n && src(i + 2) == '\'') i += 3
-      else { out.append(src(i)); i += 1 }
-    }
-    out.toString
-  }
-
   private val builderCall =
     """SparkSession\s*\.\s*builder|SparkContext\s*\.\s*getOrCreate|new\s+SparkContext\b""".r
 
@@ -53,17 +17,15 @@ class HarnessSpec extends AnyFunSuite {
     val src = "val a = '\"'; /* SparkSession.builder() /* nested */ */\n" +
       "// SparkContext.getOrCreate(c)\nval s = \"SparkSession.builder\"\n" +
       "SparkContext.getOrCreate(conf)\n"
-    assert(builderCall.findAllIn(codeOnly(src)).toSeq ===
+    assert(builderCall.findAllIn(SourceScan.codeOnly(src)).toSeq ===
       Seq("SparkContext.getOrCreate"))
   }
 
   test("only Harness.scala builds a SparkSession or SparkContext") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repo root (cwd ${Paths.get("").toAbsolutePath})")
-    val files = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val root = SourceScan.mainRoot
+    val files = SourceScan.mainSources
     def calls(p: Path): Int =
-      builderCall.findAllIn(codeOnly(Files.readString(p))).size
+      builderCall.findAllIn(SourceScan.codeOnly(Files.readString(p))).size
     val offenders = files.filter(p => p.getFileName.toString != "Harness.scala" && calls(p) > 0)
     assert(offenders.isEmpty,
       s"build the session through graft.Harness.session instead: ${offenders.mkString(", ")}")

@@ -5,13 +5,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
-class LabelStoreSpec extends SparkSpec {
+class LabelStoreSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft_labelstore").toString
+    tempDir("graft_labelstore").toString
 
   private def listing(store: String): Map[String, Set[String]] = {
     val root = Paths.get(store)

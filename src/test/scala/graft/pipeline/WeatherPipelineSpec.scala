@@ -2,6 +2,9 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -12,14 +15,14 @@ import org.apache.spark.sql.execution.window.{Final => FinalLimit, WindowExec,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.ingest.Fixtures
 import graft.model.WeatherModel
 import graft.operators.{Dedup, WeatherTransform}
 import graft.quality.QualityChecks
 import graft.sources.WeatherSink
 
-class WeatherPipelineSpec extends SparkSpec {
+class WeatherPipelineSpec extends SparkSpec with TempDirs {
 
   /** `docs` flattened and transformed, extracted at `extractedAt`. */
   private def rowsOf(extractedAt: String, docs: Seq[String]) =
@@ -49,7 +52,7 @@ class WeatherPipelineSpec extends SparkSpec {
   }
 
   test("sink upsert: re-extraction with changed values replaces the row (S8)") {
-    val dir = Files.createTempDirectory("graft_sink").toString + "/weather"
+    val dir = tempDir("graft_sink").toString + "/weather"
     val day1 = transformed(Fixtures.full)
     WeatherSink.upsertInto(spark, day1, dir)
     // same natural key, newer extraction, different temperature
@@ -73,23 +76,21 @@ class WeatherPipelineSpec extends SparkSpec {
   /** Every parquet file under `dir` whose path contains `part`, with mtime. */
   private def filesOf(dir: String, part: String) = {
     val walk = Files.walk(java.nio.file.Paths.get(dir))
-    try walk.filter(p => p.toString.contains(part) &&
+    try walk.iterator.asScala.filter(p => p.toString.contains(part) &&
         p.toString.endsWith(".parquet"))
-      .map[(String, java.nio.file.attribute.FileTime)](p =>
-        (p.toString, Files.getLastModifiedTime(p)))
-      .toArray.toSeq
+      .map(p => (p.toString, Files.getLastModifiedTime(p))).toSeq
     finally walk.close()
   }
 
-  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+  private def sortedRows(df: DataFrame) =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
 
   test("upsertInto rewrites only the incoming batch's partitions") {
-    val dir = Files.createTempDirectory("graft_dynpart").toString + "/t"
+    val dir = tempDir("graft_dynpart").toString + "/t"
     // stored: 2023-11-14, 2023-11-15, 2023-11-16
     val stored = Seq(1700000000L, 1700090000L, 1700176400L)
       .map(reading(_, 22.5, "2023-11-17 06:00:00")).reduce(_ unionByName _)
-    WeatherSink.write(stored, dir)
+    WeatherSink.upsertInto(spark, stored, dir)
     val before = spark.read.parquet(dir)
     val beforeDf = spark.createDataFrame(
       java.util.Arrays.asList(before.collect(): _*), before.schema)
@@ -130,40 +131,58 @@ class WeatherPipelineSpec extends SparkSpec {
     for (r <- threeRegions; h <- 0 until 4)
       yield doc(r, midnight + k * day + h * 3600, temp + h)
 
-  test("upsertInto writes each touched date as one file") {
-    val dir = Files.createTempDirectory("graft_cluster").toString + "/t"
-    // stored: 2023-11-14 .. 2023-11-17, 12 rows each
-    WeatherSink.write(
-      rowsOf("2023-11-20 06:00:00", (0 until 4).flatMap(dayDocs(_, 20.0))), dir)
-    val before = spark.read.parquet(dir)
-    val beforeDf = spark.createDataFrame(
-      java.util.Arrays.asList(before.collect(): _*), before.schema)
-    val untouchedDates = Seq("2023-11-14", "2023-11-15")
-    val untouched = untouchedDates.map(d => filesOf(dir, s"date=$d"))
-    assert(untouched.forall(_.nonEmpty))
-    // re-extractions of every 11-16 key, late readings for 11-17 and two
-    // new dates, 11-18 and 11-19
-    val batch = rowsOf("2023-11-21 06:00:00", dayDocs(2, 25.0) ++
-      threeRegions.map(doc(_, midnight + 3 * day + 5 * 3600, 30.0)) ++
-      dayDocs(4, 21.0) ++ dayDocs(5, 22.0))
-    // enough uncoalesced shuffle partitions that a merge keyed on anything
-    // finer than `date` scatters a date over several tasks
+  /** Upserts `batch` into the table at `dir` with enough uncoalesced
+    * shuffle partitions that a merge keyed on anything finer than `date`
+    * scatters a date over several tasks, and checks the write: one file
+    * in each date the batch touches, the other dates' files and mtimes
+    * unchanged, and the table equal to [[Dedup.upsert]] of the rows
+    * before and the batch. Returns the table's row count.
+    */
+  private def upsertChecked(dir: String, batch: DataFrame): Long = {
+    val exists = Files.exists(java.nio.file.Paths.get(dir))
+    val before =
+      if (!exists) batch.limit(0)
+      else {
+        val stored = spark.read.parquet(dir)
+        spark.createDataFrame(
+          java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+      }
+    val touched = batch.select(col("date").cast("string")).distinct()
+      .collect().map(r => s"date=${r.getString(0)}").toSeq
+    def untouched =
+      filesOf(dir, "").filterNot(f => touched.exists(f._1.contains(_)))
+    val untouchedBefore = if (exists) untouched else Nil
     withSQLConf("spark.sql.shuffle.partitions" -> "8",
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       WeatherSink.upsertInto(spark, batch, dir)
     }
-    for (d <- 16 to 19) {
-      val files = filesOf(dir, s"date=2023-11-$d")
-      assert(files.size === 1, s"2023-11-$d: ${files.mkString(", ")}")
+    for (d <- touched) {
+      val files = filesOf(dir, d)
+      assert(files.size === 1, s"$d: ${files.mkString(", ")}")
     }
-    assert(untouchedDates.map(d => filesOf(dir, s"date=$d")) === untouched,
+    assert(untouched === untouchedBefore,
       "untouched partitions must not be rewritten")
     val table = spark.read.parquet(dir)
-    val expected = Dedup.upsert(beforeDf, batch, WeatherSink.naturalKey,
+    val expected = Dedup.upsert(before, batch, WeatherSink.naturalKey,
       versionCol = "extraction_timestamp")
-    assert(table.count() === 48 + 3 + 24)
     assert(sortedRows(table) ===
       sortedRows(expected.select(table.columns.map(col): _*)))
+    table.count()
+  }
+
+  test("upsertInto writes each touched date as one file") {
+    val dir = tempDir("graft_cluster").toString + "/t"
+    // first load: 2023-11-14 .. 2023-11-17, 12 rows each
+    assert(upsertChecked(dir, rowsOf("2023-11-20 06:00:00",
+      (0 until 4).flatMap(dayDocs(_, 20.0)))) === 48)
+    // only new dates, 11-18 and 11-19
+    assert(upsertChecked(dir, rowsOf("2023-11-21 06:00:00",
+      dayDocs(4, 21.0) ++ dayDocs(5, 22.0))) === 48 + 24)
+    // re-extractions of every 11-16 key, late readings for 11-17 and two
+    // new dates, 11-20 and 11-21
+    assert(upsertChecked(dir, rowsOf("2023-11-22 06:00:00", dayDocs(2, 25.0) ++
+      threeRegions.map(doc(_, midnight + 3 * day + 5 * 3600, 30.0)) ++
+      dayDocs(6, 23.0) ++ dayDocs(7, 24.0))) === 72 + 3 + 24)
   }
 
   /** `p`'s children, looking through AQE's wrapper and its query stages. */
@@ -182,11 +201,8 @@ class WeatherPipelineSpec extends SparkSpec {
     }
   }
 
-  test("the merge write clusters on date: one exchange above the union, no writer sort") {
-    val dir = Files.createTempDirectory("graft_plan").toString + "/t"
-    WeatherSink.write(rowsOf("2023-11-20 06:00:00", dayDocs(0, 20.0)), dir)
-    // a stored date and a new one, so the merge path is taken
-    val batch = rowsOf("2023-11-21 06:00:00", dayDocs(0, 25.0) ++ dayDocs(1, 21.0))
+  /** The executed plan of the one write that `body` runs. */
+  private def writePlanOf(body: => Unit): SparkPlan = {
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -197,53 +213,52 @@ class WeatherPipelineSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      WeatherSink.upsertInto(spark, batch, dir)
+      body
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
     assert(writes.size === 1, "expected one write")
-    val write = writes.peek()
-    val toUnion = pathTo[UnionExec](write).get
-    val exchanges = toUnion.collect { case e: ShuffleExchangeExec => e }
-    assert(exchanges.size === 1, write.toString)
-    exchanges.head.outputPartitioning match {
+    writes.peek()
+  }
+
+  private def assertHashOnDate(e: SparkPlan, write: SparkPlan) =
+    e.outputPartitioning match {
       case h: HashPartitioning =>
         assert(h.expressions.flatMap(_.references.map(_.name)) === Seq("date"),
           write.toString)
       case other => fail(s"merge exchange is $other, not hash on date")
     }
+
+  test("the merge write clusters on date: one exchange above the union, no writer sort") {
+    val dir = tempDir("graft_plan").toString + "/t"
+    def upsert(extractedAt: String, docs: Seq[String]) =
+      writePlanOf(WeatherSink.upsertInto(spark, rowsOf(extractedAt, docs), dir))
+    val firstLoad = upsert("2023-11-20 06:00:00", dayDocs(0, 20.0))
+    val newDate = upsert("2023-11-21 06:00:00", dayDocs(1, 21.0))
+    // a stored date and a new one
+    val merge = upsert("2023-11-22 06:00:00", dayDocs(0, 25.0) ++ dayDocs(2, 22.0))
+    for (write <- Seq(firstLoad, newDate, merge)) {
+      val toWindow = pathTo[WindowExec](write).get
+      assert(!toWindow.exists(_.isInstanceOf[SortExec]),
+        s"a sort between the window and the write:\n$write")
+      // the exchange that feeds the window
+      assertHashOnDate(pathTo[ShuffleExchangeExec](toWindow.last).get.last,
+        write)
+    }
+    // with no stored partition the empty stored side is pruned, union
+    // and all
+    for (write <- Seq(firstLoad, newDate))
+      assert(pathTo[UnionExec](write).isEmpty, write.toString)
+    val toUnion = pathTo[UnionExec](merge).get
+    val exchanges = toUnion.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1, merge.toString)
+    assertHashOnDate(exchanges.head, merge)
     // the window's partial WindowGroupLimit does not survive the re-key:
     // with no exchange between them Spark drops the partial limit, so the
     // merge prunes no rows before its shuffle (its inputs hold one row per
     // key already: a stored table and a deduplicated batch)
     assert(toUnion.collect { case w: WindowGroupLimitExec => w.mode } ===
-      Seq(FinalLimit), write.toString)
-    val toWindow = pathTo[WindowExec](write).get
-    assert(!toWindow.exists(_.isInstanceOf[SortExec]),
-      s"a sort between the window and the write:\n$write")
-  }
-
-  test("an interrupted compact swap is restored, not overwritten") {
-    for (op <- Seq("upsertInto", "compact")) {
-      val dir = Files.createTempDirectory("graft_swap").toString + "/t"
-      WeatherSink.write(reading(1700000000L, 22.5, "2023-11-15 06:00:00"), dir)
-      // crash after `t -> t.__old__`, before `t.__staging__ -> t`, with a
-      // half-written staging directory
-      Files.move(java.nio.file.Paths.get(dir),
-        java.nio.file.Paths.get(dir + ".__old__"))
-      Files.write(Files.createDirectories(
-        java.nio.file.Paths.get(dir + ".__staging__", "date=2023-11-14"))
-        .resolve("part-0.parquet"), Array[Byte](1, 2, 3))
-      if (op == "compact") WeatherSink.compact(spark, dir)
-      else WeatherSink.upsertInto(spark,
-        reading(1700090000L, 24.0, "2023-11-16 06:00:00"), dir)
-      val temps = spark.read.parquet(dir).orderBy("data_timestamp")
-        .select("temperature").collect().map(_.getDouble(0)).toSeq
-      assert(temps === (if (op == "compact") Seq(22.5) else Seq(22.5, 24.0)),
-        s"$op lost the history")
-      assert(!Files.exists(java.nio.file.Paths.get(dir + ".__old__")))
-      assert(!Files.exists(java.nio.file.Paths.get(dir + ".__staging__")))
-    }
+      Seq(FinalLimit), merge.toString)
   }
 
   /** Fixtures.full for `region` at epoch second `dt` with `temp`. */
@@ -257,7 +272,7 @@ class WeatherPipelineSpec extends SparkSpec {
     * regions each, loaded through [[WeatherPipeline.run]].
     */
   private def history(): String = {
-    val dir = Files.createTempDirectory("graft_run").toString + "/t"
+    val dir = tempDir("graft_run").toString + "/t"
     val docs = (1 to 42).flatMap(k => Seq(
       doc("Nakuru", 1700000000L - k * day, k.toDouble),
       doc("Meru", 1700000000L - k * day + 60, k + 0.5)))
@@ -276,7 +291,7 @@ class WeatherPipelineSpec extends SparkSpec {
     doc("Nakuru", 1700000000L - 2 * day, -3.0)))
 
   private def jsonl(docs: Seq[String]): String = {
-    val f = Files.createTempFile("graft_docs", ".json")
+    val f = tempFile("graft_docs", ".json")
     Files.write(f, java.util.Arrays.asList(docs: _*))
     f.toString
   }
@@ -366,14 +381,14 @@ class WeatherPipelineSpec extends SparkSpec {
     // other dates' files, not their directories: the read still lists
     // every `date=…` directory, so the sink's own reads name their
     // partitions by path (WeatherSink.readDates)
-    val dir = Files.createTempDirectory("graft_prune").toString + "/t"
+    val dir = tempDir("graft_prune").toString + "/t"
     val day1 = transformed(Fixtures.full)        // date 2023-11-14
     val day2 = WeatherTransform.transform(
       graft.ingest.WeatherIngest.flatten(
         Fixtures.df(spark, Fixtures.full.replace("1700000000", "1700090000")),
         WeatherModel.regionDim(spark),
         extractionTime = to_timestamp(lit("2023-11-15 06:00:00"))))
-    WeatherSink.write(day1.unionByName(day2), dir)
+    WeatherSink.upsertInto(spark, day1.unionByName(day2), dir)
     val filtered = spark.read.parquet(dir)
       .filter(col("date") === lit("2023-11-14"))
     val plan = filtered.queryExecution.executedPlan.toString
@@ -391,26 +406,6 @@ class WeatherPipelineSpec extends SparkSpec {
       .find(_.metrics.contains("numFiles")).get
     assert(scan.metrics("numFiles").value === 1L,
       s"pruned scan read ${scan.metrics("numFiles").value} files")
-  }
-
-  test("compact rewrites small files without changing the data") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
-    // 8-way repartition of a tiny table -> many near-empty files
-    val df = spark.range(0, 1000)
-      .selectExpr("id", "CAST(date_add('2024-01-01', CAST(id % 3 AS INT)) AS DATE) AS date")
-      .repartition(8)
-    df.write.mode("overwrite").partitionBy("date").parquet(dir)
-    def parquetFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => p.toString.endsWith(".parquet")).count()
-    val before = parquetFiles
-    val beforeRows = spark.read.parquet(dir).orderBy("id")
-      .collect().map(_.getLong(0)).toSeq
-    WeatherSink.compact(spark, dir) // default 128 MB target -> 1 shuffle partition
-    assert(parquetFiles < before,
-      s"compaction must reduce file count (before=$before after=$parquetFiles)")
-    val afterRows = spark.read.parquet(dir).orderBy("id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(afterRows === beforeRows)
   }
 
   test("quality report mirrors the reference's three checks (A1-A3)") {
@@ -431,7 +426,7 @@ class WeatherPipelineSpec extends SparkSpec {
     val e = intercept[Exception] {
       WeatherPipeline.runWithRetry(spark,
         documentsPath = "/nonexistent/docs.json",
-        tablePath = java.nio.file.Files.createTempDirectory("wp").toString,
+        tablePath = tempDir("wp").toString,
         checkDate = lit("2023-11-14").cast("date"),
         sleep = d => slept :+= d, alert = m => alerts :+= m)
     }
