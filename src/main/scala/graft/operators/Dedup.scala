@@ -50,11 +50,11 @@ object Dedup {
     * parquet the caller overwrites the target partition-wise with the
     * result (write-then-swap, SURVEY.md §7.7).
     *
-    * `clusterBy`, a column that is a function of `keys` (so it groups no
-    * two distinct keys together), re-keys the window's one exchange on it
-    * alone and leads the window's partition spec: the result leaves
-    * hash-clustered on that column and sorted by it, which is what a
-    * writer partitioned by it needs (one file per value, no writer sort).
+    * `clusterBy`, columns that are functions of `keys` (so they group no
+    * two distinct keys together), re-key the window's one exchange on them
+    * alone and lead the window's partition spec: the result leaves
+    * hash-clustered on those columns and sorted by them, which is what a
+    * writer partitioned by them needs (one file per value, no writer sort).
     */
   def upsert(
       existing: DataFrame,
@@ -62,11 +62,12 @@ object Dedup {
       keys: Seq[String],
       versionCol: String,
       tiebreak: Seq[Column] = Nil,
-      clusterBy: Option[String] = None): DataFrame = {
+      clusterBy: Seq[String] = Nil): DataFrame = {
     val tagged = existing.withColumn("__graft_src", lit(0))
       .unionByName(incoming.withColumn("__graft_src", lit(1)))
-    keepFirst(clusterBy.fold(tagged)(c => tagged.repartition(col(c))),
-      clusterBy.toSeq ++ keys,
+    keepFirst(
+      if (clusterBy.isEmpty) tagged else tagged.repartition(clusterBy.map(col): _*),
+      clusterBy ++ keys,
       Seq(col(versionCol).desc, col("__graft_src").desc) ++ tiebreak)
       .drop("__graft_src")
   }

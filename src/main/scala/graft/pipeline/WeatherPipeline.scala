@@ -33,14 +33,14 @@ object WeatherPipeline {
     * @param documentsPath JSON-lines of OWM documents (the engine's source
     *                      boundary; live HTTP fetch is a driver concern,
     *                      out of engine scope — SURVEY.md S1)
-    * @param tablePath     sink parquet table (date-partitioned)
+    * @param tablePath     sink parquet table (partitioned by year and month)
     * @param checkDate     quality-check date (reference uses "today", py:480);
     *                      a constant expression such as `lit(...)` or
     *                      `current_date()`, folded once before any work
     */
   def run(spark: SparkSession, documentsPath: String, tablePath: String,
       checkDate: Column, extractionTime: Column = current_timestamp()): Result = {
-    val (onDate, partition) = foldCheckDate(spark, checkDate)
+    val (onDate, checkDay) = foldCheckDate(spark, checkDate)
     val raw = WeatherIngest.readDocuments(spark, documentsPath)
     val flat = WeatherIngest.flatten(raw, WeatherModel.regionDim(spark),
       extractionTime)
@@ -55,12 +55,13 @@ object WeatherPipeline {
         "No data received from extraction task")
       WeatherSink.upsertInto(spark, transformed, tablePath)
     } finally flat.unpersist()
-    // only rows of the checked date's partition can match, so the checks
-    // read that directory alone (the reference's `WHERE date = :today`
-    // index scan); with no such partition they see no rows, as a full
-    // read filtered on the date would
-    val table = WeatherSink.readDates(spark, tablePath, partition.toSeq)
-      .getOrElse(transformed.limit(0))
+    // only rows of the checked date's month can match, so the checks read
+    // that directory alone, with the batch's schema and so with no
+    // schema-inference job, and their date filter reaches parquet (the
+    // reference's `WHERE date = :today` index scan); with no such month
+    // they see no rows, as a full read filtered on the date would
+    val table = WeatherSink.readDates(spark, tablePath, checkDay.toSeq,
+      transformed.schema).getOrElse(transformed.limit(0))
     val report = QualityChecks.report(table, onDate)
     report.warnings.foreach(w => System.err.println(s"[quality] WARN: $w"))
     Result(tablePath, report)
@@ -68,9 +69,9 @@ object WeatherPipeline {
 
   /** `checkDate` folded to a literal on the driver by Catalyst's constant
     * folding, which starts no Spark job: the value the checks compare
-    * `date` with, and the `date=…` partition that can hold rows equal to
-    * it (`None` when it is null). Folding once also pins
-    * `current_date()` to the start of the run.
+    * `date` with, and that value as a `yyyy-MM-dd` day, whose month
+    * partition alone can hold rows equal to it (`None` when it is null).
+    * Folding once also pins `current_date()` to the start of the run.
     */
   private def foldCheckDate(spark: SparkSession, checkDate: Column)
       : (Column, Option[String]) = {

@@ -7,13 +7,15 @@ import org.apache.spark.sql.functions._
   * (daily_weather_etl_kenya.py:470-539), re-expressed as Spark aggregates.
   *
   * The reference pushes three parameterized SQL aggregates to Postgres
-  * (`WHERE date = :today`, index-assisted). Here the same predicates hit
-  * the `date` partition column of the parquet sink. The index-scan
-  * analog is the caller's: `WeatherPipeline.run` hands in only the
-  * checked date's partition directory, because a filtered read of the
-  * whole table prunes the other dates' files but still lists every
-  * `date=…` directory. The three checks are one small aggregate job with
-  * a map-side partial ([[report]]).
+  * (`WHERE date = :today`, index-assisted). Here the same predicate
+  * filters the `date` column of the parquet sink, and parquet skips the
+  * row groups whose `date` statistics exclude it. The index-scan analog
+  * is the caller's: `WeatherPipeline.run` hands in only the checked
+  * date's month partition, because a filtered read of the whole table
+  * lists every `year=…/month=…` directory, infers the schema from a
+  * footer in a job of its own and opens every month's file. The three
+  * checks are one small aggregate job with a map-side partial and one
+  * exchange ([[report]]).
   *
   * As in the reference, failed expectations WARN, they do not fail the
   * pipeline (py:496/513/529 use logging.warning).
@@ -47,7 +49,9 @@ object QualityChecks {
   /** Run all three checks in ONE aggregate job (the reference issues three
     * separate queries; fusing them is free on Spark and scans once):
     * A1 (py:482-498) distinct regions reporting on the date, an exact
-    * count because the domain is 15 values; A2 (py:500-515) conditional
+    * count because the domain is 15 values (the size of the set of
+    * non-null regions: `countDistinct` would plan a second exchange to
+    * group by region first); A2 (py:500-515) conditional
     * null counts of the critical measures; A3 (py:517-531) temperature
     * extremes.
     */
@@ -58,7 +62,7 @@ object QualityChecks {
     val nullAggs = nullCheckCols.map(c =>
       count(when(col(c).isNull, lit(1))).as(s"nulls_$c"))
     val aggs = Seq(
-      countDistinct(col("region")).as("region_count"),
+      size(collect_set(col("region"))).cast("long").as("region_count"),
       min(col("temperature")).as("min_temp"),
       max(col("temperature")).as("max_temp")) ++ nullAggs
     val row = df.filter(col("date") === onDate)

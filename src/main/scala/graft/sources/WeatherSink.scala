@@ -1,22 +1,27 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
+import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
 
-/** Durable store for the weather table: date-partitioned parquet.
+/** Durable store for the weather table: parquet partitioned by
+  * (`year`, `month`), one file per month.
   *
   * Replaces the reference's PostgreSQL sink (DDL py:76-134, upsert
   * py:392-468). Its four b-tree indexes (region / date / data_timestamp /
-  * (region, date), py:116-119) are subsumed by `partitionBy("date")`
-  * (partition pruning) plus parquet min/max column statistics with filter
-  * pushdown for `region` and `data_timestamp` (SURVEY.md §4) — no custom
-  * machinery, and the same plan holds on a 1000-executor cluster.
+  * (region, date), py:116-119) are subsumed by the month partitions plus
+  * parquet min/max column statistics with filter pushdown for `date`,
+  * `region` and `data_timestamp` (SURVEY.md §4) — no custom machinery, and
+  * the same plan holds on a 1000-executor cluster. A month holds a few
+  * hundred rows a region, so a file per month keeps the parquet footer a
+  * small share of the bytes, where a file per day was mostly footer.
   *
-  * [[upsertInto]] is the table's one write, so every date directory holds
+  * [[upsertInto]] is the table's one write, so every month directory holds
   * exactly one file and no compaction pass is needed.
   */
 object WeatherSink {
@@ -24,60 +29,68 @@ object WeatherSink {
   val naturalKey: Seq[String] = Seq("region", "data_timestamp")
 
   /** Keyed upsert into the table (the reference's ON CONFLICT DO UPDATE,
-    * py:422-452), scoped to the date partitions the batch touches, and
-    * the table's only write: the first load, a batch of new dates and a
-    * batch over stored dates take the same plan. The batch's distinct
-    * dates are collected to the driver (one for a daily run; skipped
-    * when the table does not exist yet), the stored partitions among them
-    * are read with [[readDates]] (an empty relation when there are none,
-    * which Catalyst prunes from the merge's union), merged with the batch
-    * via [[Dedup.upsert]] and written back with per-write dynamic
-    * partition overwrite. A daily batch therefore costs its own
-    * partitions' IO whatever the history behind it; untouched partitions
-    * keep their files.
+    * py:422-452), scoped to the month partitions the batch touches, and
+    * the table's only write: the first load, a batch of new months and a
+    * batch over stored months take the same plan. The batch's distinct
+    * dates are collected to the driver (skipped when the table does not
+    * exist yet), the stored months holding them are read with
+    * [[readDates]] (an empty relation when there are none, which Catalyst
+    * prunes from the merge's union), merged with the batch via
+    * [[Dedup.upsert]] and written back with per-write dynamic partition
+    * overwrite. A daily batch therefore costs its own months' IO whatever
+    * the history behind it; untouched months keep their files.
     *
-    * The merge keys its one exchange on `date` alone (`clusterBy`), so
-    * each touched date is written by one task as one file, and the
-    * window's sort on (`date`, key, version) already orders the rows for
-    * the partitioned writer, which then sorts nothing.
+    * The merge keys its one exchange on (`year`, `month`) alone
+    * (`clusterBy`), so each touched month is written by one task as one
+    * file, and the window's sort on (`year`, `month`, key, version)
+    * already orders the rows for the partitioned writer, which then sorts
+    * nothing.
     *
-    * Commit: Spark writes the touched partitions to a staging directory,
-    * then deletes each touched `date=…` directory and renames its new
-    * files in. That is not the reference's single transaction with
-    * rollback (py:454-468): a crash inside the commit can lose the
-    * partitions being replaced, but never the untouched history.
+    * Commit: Spark writes the touched months to a staging directory, then
+    * deletes each touched `year=…/month=…` directory and renames its new
+    * file in. That is not the reference's single transaction with
+    * rollback (py:454-468): a crash inside the commit can lose the months
+    * being replaced, every date in them, but never the untouched history.
     */
   def upsertInto(spark: SparkSession, incoming: DataFrame, path: String): Unit = {
+    import spark.implicits._
     val stored =
       if (!Files.exists(Paths.get(path))) None
       else {
-        // ingest rejects documents without `dt`, so `date` is never null
-        val dates = incoming.select(col("date").cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        readDates(spark, path, dates)
+        // ingest rejects documents without `dt`, so `date` is never null;
+        // deduplicated per task and then on the driver, which adds no
+        // exchange above the batch's dedup window
+        val dates = incoming.select(col("date").cast("string")).as[String]
+          .mapPartitions(_.toSet.iterator).collect().toSeq
+        readDates(spark, path, dates, incoming.schema)
       }
-    // `date` = to_date(data_timestamp), so clustering on it keys the
-    // same rows together
+    // `year` and `month` are functions of `data_timestamp`, so clustering
+    // on them keys the same rows together
     val merged = Dedup.upsert(stored.getOrElse(incoming.limit(0)), incoming,
-      naturalKey, versionCol = "extraction_timestamp", clusterBy = Some("date"))
+      naturalKey, versionCol = "extraction_timestamp",
+      clusterBy = Seq("year", "month"))
     // per-write dynamic mode, not a session-conf toggle that concurrent
     // writers could interleave
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("date").parquet(path)
+      .partitionBy("year", "month").parquet(path)
   }
 
-  /** The stored partitions of `dates` (`yyyy-MM-dd`: Spark names a
-    * partition directory by the value cast to string), read by explicit
-    * `date=…` path with `basePath`, so the table's other directories are
-    * never listed. `None` when the table holds none of them.
+  /** The stored month partitions that hold `dates` (`yyyy-MM-dd`), every
+    * row of those months, or `None` when the table holds none of them.
+    * They are read by explicit `year=…/month=…` path with `basePath`, so
+    * the table's other directories are never listed, and with `schema`,
+    * the table's schema (the partition columns included), so no job reads
+    * a footer to infer it.
     */
-  def readDates(spark: SparkSession, path: String, dates: Seq[String])
-      : Option[DataFrame] = {
-    val dirs = dates.distinct.map(d => Paths.get(path).resolve(s"date=$d"))
+  def readDates(spark: SparkSession, path: String, dates: Seq[String],
+      schema: StructType): Option[DataFrame] = {
+    val dirs = dates.map(LocalDate.parse).map(d => (d.getYear, d.getMonthValue))
+      .distinct
+      .map { case (y, m) => Paths.get(path).resolve(s"year=$y/month=$m") }
       .filter(Files.isDirectory(_))
     if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", path)
+    else Some(spark.read.schema(schema).option("basePath", path)
       .parquet(dirs.map(_.toString): _*))
   }
 }

@@ -22,11 +22,11 @@ import graft.sources.WeatherSink
   *  - A1/A3 quality → windowed event-time aggregation with watermark
   *  - S8 upsert sink → `foreachBatch` calling the batch upsert, the
   *    table's one write: every micro-batch, the first into an empty table
-  *    included, merges into the date partitions it touches and leaves one
-  *    file per touched date, and a replayed batch merges to the same rows,
-  *    giving last-writer-wins per key on top of at-least-once delivery.
-  *    The merge is not transactional: a crash inside its commit can
-  *    lose the touched partitions (see [[WeatherSink.upsertInto]])
+  *    included, merges into the month partitions it touches and leaves
+  *    one file per touched month, and a replayed batch merges to the same
+  *    rows, giving last-writer-wins per key on top of at-least-once
+  *    delivery. The merge is not transactional: a crash inside its commit
+  *    can lose the touched months (see [[WeatherSink.upsertInto]])
   */
 object WeatherStream {
 

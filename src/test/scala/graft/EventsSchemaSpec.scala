@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
@@ -13,12 +11,12 @@ import org.apache.spark.sql.Row
   * `Queries.normalizeEvents` via written fixtures, plus a probe of the
   * real testdata.
   */
-class EventsSchemaSpec extends SparkSpec {
+class EventsSchemaSpec extends SparkSpec with TempDirs {
 
   private val baseNs = 1700000000123456000L // µs-aligned epoch-nanos
 
   private def tmpDir(): String =
-    Files.createTempDirectory("events-fixture").toString
+    tempDir("events-fixture").toString
 
   private def assertCanonical(df: org.apache.spark.sql.DataFrame): Unit = {
     assert(df.schema("ts").dataType == TimestampType,

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
-class KllSketchSpec extends SparkSpec {
+class KllSketchSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("exact mode: inclusive quantile is the ceil(q*n)-th order statistic") {
@@ -96,7 +96,7 @@ class KllSketchSpec extends SparkSpec {
   test("day-store delta append leaves existing partitions byte-identical") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val store = Files.createTempDirectory("graft_kllstore").toString + "/sk"
+    val store = tempDir("graft_kllstore").toString + "/sk"
     def listing(): Map[String, Map[String, Long]] = {
       val root = Paths.get(store)
       Files.list(root).iterator().asScala
@@ -158,7 +158,7 @@ class KllSketchSpec extends SparkSpec {
         Sketches.kllQuantile(col("sk"), lit(1.0)).as("max"))
       .writeStream.outputMode("complete")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_kllstream").toString)
+        tempDir("graft_kllstream").toString)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         last = b.collect()
       }

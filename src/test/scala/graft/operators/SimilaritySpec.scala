@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private val vecs = Seq(
@@ -496,7 +496,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("quantizer store: train once, load bit-identical, retrain on corpus change") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qstore_spec")
+    val dir = tempDir("graft_qstore_spec")
       .toString
     val rnd = new scala.util.Random(41)
     def unit(): Array[Float] = {
@@ -530,7 +530,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("semDedupAuto == semDedup at the derived nlist (store or fresh)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qstore_spec2")
+    val dir = tempDir("graft_qstore_spec2")
       .toString
     val rnd = new scala.util.Random(43)
     def unit(): Array[Float] = {
@@ -581,7 +581,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("quantizer store: torn/invalid entries fall back to retrain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qstore_val")
+    val dir = tempDir("graft_qstore_val")
       .toString
     val rnd = new scala.util.Random(47)
     def unit(): Array[Float] = {
@@ -621,7 +621,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("adaptiveTopK: exact arm below threshold is bruteForceTopK bit-for-bit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qstore_ad1")
+    val dir = tempDir("graft_qstore_ad1")
       .toString
     val rnd = new scala.util.Random(53)
     val corpus = (0L until 50L)
@@ -643,7 +643,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("adaptiveTopK: IVF arm above threshold finds the planted twin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qstore_ad2")
+    val dir = tempDir("graft_qstore_ad2")
       .toString
     val rnd = new scala.util.Random(59)
     def unit(): Array[Float] = {

@@ -85,24 +85,36 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
   private def sortedRows(df: DataFrame) =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
 
+  /** `Fixtures.full`'s reading time, 2023-11-14T22:13:20Z, `k` months
+    * earlier.
+    */
+  private def monthsAgo(k: Int): Long = {
+    val utc = java.time.ZoneOffset.UTC
+    java.time.LocalDateTime.ofEpochSecond(1700000000L, 0, utc)
+      .minusMonths(k).toEpochSecond(utc)
+  }
+
+  /** The path segment of month `m` of `y`'s partition directory. */
+  private def monthDir(y: Int, m: Int) = s"year=$y/month=$m/"
+
   test("upsertInto rewrites only the incoming batch's partitions") {
     val dir = tempDir("graft_dynpart").toString + "/t"
-    // stored: 2023-11-14, 2023-11-15, 2023-11-16
-    val stored = Seq(1700000000L, 1700090000L, 1700176400L)
+    // stored: 2023-09-14, 2023-10-14, 2023-11-14
+    val stored = Seq(monthsAgo(2), monthsAgo(1), monthsAgo(0))
       .map(reading(_, 22.5, "2023-11-17 06:00:00")).reduce(_ unionByName _)
     WeatherSink.upsertInto(spark, stored, dir)
     val before = spark.read.parquet(dir)
     val beforeDf = spark.createDataFrame(
       java.util.Arrays.asList(before.collect(): _*), before.schema)
-    val untouched = filesOf(dir, "date=2023-11-16")
+    val untouched = filesOf(dir, monthDir(2023, 9))
     assert(untouched.nonEmpty)
     val incoming = Seq(
       reading(1700000000L, 30.5, "2023-11-18 06:00:00"), // re-extraction
-      reading(1700086400L, 18.0, "2023-11-18 06:00:00"), // late, 2023-11-15
-      reading(1700262800L, 25.0, "2023-11-18 06:00:00")  // new date 2023-11-17
+      reading(monthsAgo(1) - 3 * day, 18.0, "2023-11-18 06:00:00"), // late, 2023-10-11
+      reading(1700000000L + 20 * day, 25.0, "2023-11-18 06:00:00")  // new month 2023-12
     ).reduce(_ unionByName _)
     WeatherSink.upsertInto(spark, incoming, dir)
-    assert(filesOf(dir, "date=2023-11-16") === untouched,
+    assert(filesOf(dir, monthDir(2023, 9)) === untouched,
       "untouched partition must not be rewritten")
     val table = spark.read.parquet(dir)
     val expected = Dedup.upsert(beforeDf, incoming, WeatherSink.naturalKey,
@@ -132,10 +144,10 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
       yield doc(r, midnight + k * day + h * 3600, temp + h)
 
   /** Upserts `batch` into the table at `dir` with enough uncoalesced
-    * shuffle partitions that a merge keyed on anything finer than `date`
-    * scatters a date over several tasks, and checks the write: one file
-    * in each date the batch touches, the other dates' files and mtimes
-    * unchanged, and the table equal to [[Dedup.upsert]] of the rows
+    * shuffle partitions that a merge keyed on anything finer than the
+    * month scatters a month over several tasks, and checks the write: one
+    * file in each month the batch touches, the other months' files and
+    * mtimes unchanged, and the table equal to [[Dedup.upsert]] of the rows
     * before and the batch. Returns the table's row count.
     */
   private def upsertChecked(dir: String, batch: DataFrame): Long = {
@@ -147,8 +159,8 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
         spark.createDataFrame(
           java.util.Arrays.asList(stored.collect(): _*), stored.schema)
       }
-    val touched = batch.select(col("date").cast("string")).distinct()
-      .collect().map(r => s"date=${r.getString(0)}").toSeq
+    val touched = batch.select("year", "month").distinct()
+      .collect().map(r => monthDir(r.getInt(0), r.getInt(1))).toSeq
     def untouched =
       filesOf(dir, "").filterNot(f => touched.exists(f._1.contains(_)))
     val untouchedBefore = if (exists) untouched else Nil
@@ -170,19 +182,22 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
     table.count()
   }
 
-  test("upsertInto writes each touched date as one file") {
+  test("upsertInto writes each touched month as one file") {
     val dir = tempDir("graft_cluster").toString + "/t"
-    // first load: 2023-11-14 .. 2023-11-17, 12 rows each
-    assert(upsertChecked(dir, rowsOf("2023-11-20 06:00:00",
-      (0 until 4).flatMap(dayDocs(_, 20.0)))) === 48)
-    // only new dates, 11-18 and 11-19
-    assert(upsertChecked(dir, rowsOf("2023-11-21 06:00:00",
-      dayDocs(4, 21.0) ++ dayDocs(5, 22.0))) === 48 + 24)
-    // re-extractions of every 11-16 key, late readings for 11-17 and two
-    // new dates, 11-20 and 11-21
-    assert(upsertChecked(dir, rowsOf("2023-11-22 06:00:00", dayDocs(2, 25.0) ++
-      threeRegions.map(doc(_, midnight + 3 * day + 5 * 3600, 30.0)) ++
-      dayDocs(6, 23.0) ++ dayDocs(7, 24.0))) === 72 + 3 + 24)
+    // days after 2023-11-14: 17 is 2023-12-01, 48 is 2024-01-01, 79 is
+    // 2024-02-01 and 108 is 2024-03-01
+    // first load: 2023-11-14 .. 11-17 and 2023-12-01 .. 12-04, 12 rows a day
+    assert(upsertChecked(dir, rowsOf("2024-04-01 06:00:00",
+      (0 until 4).flatMap(dayDocs(_, 20.0)) ++
+        (17 until 21).flatMap(dayDocs(_, 20.0)))) === 96)
+    // only new months, 2024-01 and 2024-02
+    assert(upsertChecked(dir, rowsOf("2024-04-02 06:00:00",
+      dayDocs(48, 21.0) ++ dayDocs(49, 21.0) ++ dayDocs(79, 22.0))) === 96 + 36)
+    // re-extractions of every 11-16 key, late readings for 12-02 and a
+    // new month, 2024-03
+    assert(upsertChecked(dir, rowsOf("2024-04-03 06:00:00", dayDocs(2, 25.0) ++
+      threeRegions.map(doc(_, midnight + 18 * day + 5 * 3600, 30.0)) ++
+      dayDocs(108, 23.0) ++ dayDocs(109, 24.0))) === 132 + 3 + 24)
   }
 
   /** `p`'s children, looking through AQE's wrapper and its query stages. */
@@ -201,13 +216,14 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
     }
   }
 
-  /** The executed plan of the one write that `body` runs. */
-  private def writePlanOf(body: => Unit): SparkPlan = {
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+  /** The executed plan of the one query that `body` runs and `pick`
+    * accepts.
+    */
+  private def planOf(pick: SparkPlan => Boolean)(body: => Unit): SparkPlan = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (pathTo[DataWritingCommandExec](qe.executedPlan).nonEmpty)
-          writes.add(qe.executedPlan)
+        if (pick(qe.executedPlan)) plans.add(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception)
           : Unit = ()
     }
@@ -215,44 +231,51 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
     try {
       body
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
-    assert(writes.size === 1, "expected one write")
-    writes.peek()
+    assert(plans.size === 1, "expected one query")
+    plans.peek()
   }
 
-  private def assertHashOnDate(e: SparkPlan, write: SparkPlan) =
+  private def writePlanOf(body: => Unit): SparkPlan =
+    planOf(pathTo[DataWritingCommandExec](_).nonEmpty)(body)
+
+  private def assertHashOnMonth(e: SparkPlan, write: SparkPlan) =
     e.outputPartitioning match {
       case h: HashPartitioning =>
-        assert(h.expressions.flatMap(_.references.map(_.name)) === Seq("date"),
-          write.toString)
-      case other => fail(s"merge exchange is $other, not hash on date")
+        assert(h.expressions.flatMap(_.references.map(_.name)) ===
+          Seq("year", "month"), write.toString)
+      case other => fail(s"merge exchange is $other, not hash on (year, month)")
     }
 
-  test("the merge write clusters on date: one exchange above the union, no writer sort") {
+  test("the merge write clusters on (year, month), with no writer sort") {
     val dir = tempDir("graft_plan").toString + "/t"
     def upsert(extractedAt: String, docs: Seq[String]) =
       writePlanOf(WeatherSink.upsertInto(spark, rowsOf(extractedAt, docs), dir))
-    val firstLoad = upsert("2023-11-20 06:00:00", dayDocs(0, 20.0))
-    val newDate = upsert("2023-11-21 06:00:00", dayDocs(1, 21.0))
-    // a stored date and a new one
-    val merge = upsert("2023-11-22 06:00:00", dayDocs(0, 25.0) ++ dayDocs(2, 22.0))
-    for (write <- Seq(firstLoad, newDate, merge)) {
+    // 2023-11 and 2023-12
+    val firstLoad = upsert("2024-01-20 06:00:00",
+      dayDocs(0, 20.0) ++ dayDocs(17, 20.0))
+    // 2024-01
+    val newMonth = upsert("2024-01-21 06:00:00", dayDocs(48, 21.0))
+    // a stored date, a new date in a stored month and a new month, 2024-02
+    val merge = upsert("2024-01-22 06:00:00",
+      dayDocs(0, 25.0) ++ dayDocs(2, 22.0) ++ dayDocs(79, 22.0))
+    for (write <- Seq(firstLoad, newMonth, merge)) {
       val toWindow = pathTo[WindowExec](write).get
       assert(!toWindow.exists(_.isInstanceOf[SortExec]),
         s"a sort between the window and the write:\n$write")
       // the exchange that feeds the window
-      assertHashOnDate(pathTo[ShuffleExchangeExec](toWindow.last).get.last,
+      assertHashOnMonth(pathTo[ShuffleExchangeExec](toWindow.last).get.last,
         write)
     }
     // with no stored partition the empty stored side is pruned, union
     // and all
-    for (write <- Seq(firstLoad, newDate))
+    for (write <- Seq(firstLoad, newMonth))
       assert(pathTo[UnionExec](write).isEmpty, write.toString)
     val toUnion = pathTo[UnionExec](merge).get
     val exchanges = toUnion.collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.size === 1, merge.toString)
-    assertHashOnDate(exchanges.head, merge)
+    assertHashOnMonth(exchanges.head, merge)
     // the window's partial WindowGroupLimit does not survive the re-key:
     // with no exchange between them Spark drops the partial limit, so the
     // merge prunes no rows before its shuffle (its inputs hold one row per
@@ -268,27 +291,36 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
 
   private val day = 86400L
 
-  /** A table of 42 daily partitions, 2023-10-03 .. 2023-11-13, two
-    * regions each, loaded through [[WeatherPipeline.run]].
+  /** A table of 42 month partitions, 2020-05 .. 2023-10, with one day
+    * each, the 14th, and two regions on it, loaded through
+    * [[WeatherPipeline.run]].
     */
   private def history(): String = {
     val dir = tempDir("graft_run").toString + "/t"
     val docs = (1 to 42).flatMap(k => Seq(
-      doc("Nakuru", 1700000000L - k * day, k.toDouble),
-      doc("Meru", 1700000000L - k * day + 60, k + 0.5)))
+      doc("Nakuru", monthsAgo(k), k.toDouble),
+      doc("Meru", monthsAgo(k) + 60, k + 0.5)))
     WeatherPipeline.run(spark, jsonl(docs), dir,
-      lit("2023-11-13").cast("date"))
+      lit("2023-10-14").cast("date"))
     dir
   }
 
-  /** The next day's batch: two readings on the new date 2023-11-14, a late
-    * reading for 2023-11-10 and a re-extraction of a stored 2023-11-12 key.
+  /** The month partition directories under `dir`. */
+  private def monthDirs(dir: String): Seq[String] =
+    for {
+      y <- new java.io.File(dir).listFiles().toSeq if y.getName.startsWith("year=")
+      m <- y.list().toSeq if m.startsWith("month=")
+    } yield s"${y.getName}/$m"
+
+  /** The next day's batch: two readings on the new date 2023-11-14, in a
+    * new month, a late reading for 2023-10-10 and a re-extraction of a
+    * stored 2023-09-14 key.
     */
   private def dailyBatch(): String = jsonl(Seq(
     doc("Nakuru", 1700000000L, 22.5),
     doc("Meru", 1700000060L, 31.0),
-    doc("Nakuru", 1700000000L - 4 * day + 3600, 45.5),
-    doc("Nakuru", 1700000000L - 2 * day, -3.0)))
+    doc("Nakuru", monthsAgo(1) - 4 * day + 3600, 45.5),
+    doc("Nakuru", monthsAgo(2), -3.0)))
 
   private def jsonl(docs: Seq[String]): String = {
     val f = tempFile("graft_docs", ".json")
@@ -298,15 +330,17 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
 
   test("run's quality report equals the checks over the whole table") {
     val dir = history()
-    assert(new java.io.File(dir).list().count(_.startsWith("date=")) === 42)
+    assert(monthDirs(dir).size === 42)
     val batch = dailyBatch()
     // label, check date, regions reporting on it
     val checks = Seq(
       ("in the batch", lit("2023-11-14").cast("date"), 2),
-      ("stored, not in the batch", lit("2023-10-05"), 2),
+      ("stored, not in the batch", lit("2020-07-14"), 2),
+      ("late, in a stored month", lit("2023-10-10"), 1),
+      ("no rows, in a stored month", lit("2023-10-20"), 0),
       ("no partition", to_date(lit("2024-01-01")), 0),
       ("null", lit(null), 0),
-      ("folded", date_add(lit("2023-11-09").cast("date"), 1), 2))
+      ("folded", date_add(lit("2023-10-13").cast("date"), 1), 2))
     for ((label, d, regions) <- checks) {
       val got = WeatherPipeline.run(spark, batch, dir, d).quality
       // reference: the checks over a read of the whole table
@@ -322,17 +356,18 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
     assert(filesOf(dir, "") === before, "table changed before the rejection")
   }
 
-  test("run into a 42-partition table starts no job over its directories") {
-    val dir = history()
-    val batch = dailyBatch()
-    val group = s"guard-${System.nanoTime()}"
-    val jobTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  /** The starts of the jobs that `body` runs on this thread. */
+  private def jobsOf(body: => Unit)
+      : Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+    val group = s"jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]()
     @volatile var drained = false
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobTasks.add(e.stageInfos.map(_.numTasks).sum)
+          case Some(`group`) => jobs.add(e)
           case Some(g) if g == group + "-drain" => drained = true
           case _ => ()
         }
@@ -340,10 +375,10 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "run")
-      WeatherPipeline.run(spark, batch, dir, lit("2023-11-14").cast("date"))
+      sc.setJobGroup(group, "body")
+      body
       // listener events arrive in order: once this job's start is seen,
-      // every job `run` started has been counted
+      // every job `body` started has been counted
       sc.setJobGroup(group + "-drain", "drain")
       sc.parallelize(Seq(1), 1).count()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
@@ -353,59 +388,88 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    val tasks = jobTasks.toArray.toSeq.map(_.asInstanceOf[Int])
-    assert(tasks.nonEmpty)
+    jobs.asScala.toSeq
+  }
+
+  test("run into a 42-partition table starts no job over its directories") {
+    val dir = history()
+    assert(monthDirs(dir).size === 42)
+    val batch = dailyBatch()
+    val jobs = jobsOf(
+      WeatherPipeline.run(spark, batch, dir, lit("2023-11-14").cast("date")))
+    assert(jobs.nonEmpty)
+    val tasks = jobs.map(_.stageInfos.map(_.numTasks).sum)
     assert(tasks.max < 40, s"tasks per job: ${tasks.mkString(", ")}")
+    // a listing or schema-inference job runs while a read is resolved, so
+    // outside any SQL execution; every job of `run` belongs to one of its
+    // queries
+    val outside = jobs.filter(
+      _.properties.getProperty("spark.sql.execution.id") == null)
+    assert(outside.isEmpty,
+      s"jobs outside a query: ${outside.map(_.stageInfos.map(_.name)).mkString(", ")}")
   }
 
   test("readDates reads exactly the stored partitions it is asked for") {
     val dir = history()
-    val dates = Seq("2023-10-04", "2023-12-01", "2023-11-13", "2023-10-04")
-    val got = WeatherSink.readDates(spark, dir, dates).get
-    val want = spark.read.parquet(dir).filter(col("date").isin(dates: _*))
+    val schema = spark.read.parquet(dir).schema
+    // months 2020-06 and 2023-10 are stored, 2023-12 is not
+    val dates = Seq("2020-06-30", "2023-12-01", "2023-10-14", "2020-06-01")
+    val got = WeatherSink.readDates(spark, dir, dates, schema).get
+    assert(got.schema === schema)
+    val want = spark.read.parquet(dir).filter(
+      col("year") === 2020 && col("month") === 6 ||
+        col("year") === 2023 && col("month") === 10)
     assert(want.count() === 4)
-    assert(sortedRows(got) === sortedRows(want.select(got.columns.map(col): _*)))
-    val asked = Seq("2023-10-04", "2023-11-13")
-      .map(d => java.nio.file.Paths.get(dir, s"date=$d"))
-    assert(got.inputFiles.nonEmpty && got.inputFiles.forall(f =>
-      asked.contains(java.nio.file.Paths.get(new java.net.URI(f)).getParent)),
-      got.inputFiles.mkString(", "))
-    assert(WeatherSink.readDates(spark, dir, Seq("2023-12-01")).isEmpty)
-    assert(WeatherSink.readDates(spark, dir + "-missing", dates).isEmpty)
+    assert(sortedRows(got) === sortedRows(want))
+    val asked = Seq(monthDir(2020, 6), monthDir(2023, 10))
+      .map(m => java.nio.file.Paths.get(dir, m))
+    val files = got.inputFiles.toSeq
+      .map(f => java.nio.file.Paths.get(new java.net.URI(f)))
+    assert(files.map(_.getParent).sorted === asked.sorted, files.mkString(", "))
+    assert(WeatherSink.readDates(spark, dir, Seq("2023-12-01"), schema).isEmpty)
+    assert(WeatherSink.readDates(spark, dir + "-missing", dates, schema).isEmpty)
   }
 
-  test("weather store prunes partitions on date (the reference's index analog)") {
-    // py:116-119's b-tree date index maps to partitionBy("date") +
-    // partition pruning: a date-filtered read must carry a real
-    // PartitionFilter and touch ONLY that date's files. Pruning skips the
-    // other dates' files, not their directories: the read still lists
-    // every `date=…` directory, so the sink's own reads name their
-    // partitions by path (WeatherSink.readDates)
+  test("readDates with the table's schema starts no Spark job") {
+    val dir = history()
+    val schema = spark.read.parquet(dir).schema
+    val jobs = jobsOf {
+      val months = WeatherSink.readDates(spark, dir,
+        Seq("2020-06-30", "2023-10-14"), schema).get
+      // planning the read lists its two directories, and the filter on
+      // the partition columns resolves against the given schema
+      months.filter(col("month") === 6).queryExecution.executedPlan
+    }
+    assert(jobs.isEmpty,
+      s"jobs: ${jobs.map(_.stageInfos.map(_.name)).mkString(", ")}")
+  }
+
+  test("weather store pushes date filters down to parquet") {
+    // py:116-119's b-tree date index maps to the month partitions plus
+    // parquet statistics: a date-filtered read of the whole table pushes
+    // `date` into the scan, which then skips the other months' row groups
+    // by their `date` min/max. The read still lists every month
+    // directory and opens every month's file, so the sink's own reads
+    // name their months by path (WeatherSink.readDates)
     val dir = tempDir("graft_prune").toString + "/t"
-    val day1 = transformed(Fixtures.full)        // date 2023-11-14
-    val day2 = WeatherTransform.transform(
-      graft.ingest.WeatherIngest.flatten(
-        Fixtures.df(spark, Fixtures.full.replace("1700000000", "1700090000")),
-        WeatherModel.regionDim(spark),
-        extractionTime = to_timestamp(lit("2023-11-15 06:00:00"))))
-    WeatherSink.upsertInto(spark, day1.unionByName(day2), dir)
+    // 2023-11-14 and 2023-11-15 in one month, 2023-10-14 in another
+    WeatherSink.upsertInto(spark, Seq(monthsAgo(0), monthsAgo(0) + day,
+      monthsAgo(1)).map(reading(_, 22.5, "2023-11-16 06:00:00"))
+      .reduce(_ unionByName _), dir)
     val filtered = spark.read.parquet(dir)
       .filter(col("date") === lit("2023-11-14"))
     val plan = filtered.queryExecution.executedPlan.toString
-    val pf = plan.linesIterator
-      .find(_.contains("PartitionFilters:")).getOrElse("")
-    assert(pf.contains("date"), s"no partition filter on date:\n$pf")
-    assert(!pf.replaceAll("PartitionFilters:\\s*\\[\\s*\\]", "").isEmpty &&
-      !pf.matches(".*PartitionFilters:\\s*\\[\\s*\\].*"),
-      s"PartitionFilters is empty — scan reads every date:\n$pf")
-    // runtime proof (inputFiles lists the PRE-pruning relation): after
-    // execution the scan's own metrics must show one file / one
-    // partition read, though the store holds two dates
+    val pushed = plan.linesIterator
+      .find(_.contains("PushedFilters:")).getOrElse("")
+    assert(pushed.contains("EqualTo(date,2023-11-14)"),
+      s"date is not pushed to parquet:\n$plan")
+    // runtime proof: the scan's own row count is the checked month's two
+    // rows, so the other month's file yielded none
     assert(filtered.collect().length === 1) // collect() runs THIS plan
     val scan = filtered.queryExecution.executedPlan.collectLeaves()
-      .find(_.metrics.contains("numFiles")).get
-    assert(scan.metrics("numFiles").value === 1L,
-      s"pruned scan read ${scan.metrics("numFiles").value} files")
+      .find(_.metrics.contains("numOutputRows")).get
+    assert(scan.metrics("numOutputRows").value === 2L,
+      s"scan output ${scan.metrics("numOutputRows").value} rows")
   }
 
   test("quality report mirrors the reference's three checks (A1-A3)") {
@@ -416,6 +480,19 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
     assert(rep.minTemp.get === 22.5)
     assert(rep.maxTemp.get === 30.0)
     assert(rep.warnings.exists(_.contains("Expected 15 regions, found 2")))
+  }
+
+  test("quality report aggregates in one exchange") {
+    val dir = tempDir("graft_report").toString + "/t"
+    WeatherSink.upsertInto(spark,
+      transformed(Fixtures.full, Fixtures.missingOptionals), dir)
+    val plan = planOf(_ => true) {
+      QualityChecks.report(spark.read.parquet(dir),
+        lit("2023-11-14").cast("date"))
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    assert(nodes(plan).count(_.isInstanceOf[ShuffleExchangeExec]) === 1,
+      plan.toString)
   }
 
   test("runWithRetry retries the DAG 2x with the 5-min delay, then alerts (C3)") {

@@ -1,11 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Adversarial CSV/JSON round-trip fuzz over the q121 source/sink
   * surface (the KernelFuzzSpec pattern applied to text formats): quoted
@@ -32,7 +30,7 @@ import graft.SparkSpec
   * hole (emitted unquoted, re-parsed as null) and are pinned here as a
   * DOCUMENTED divergence, not silently skipped.
   */
-class FormatFuzzSpec extends SparkSpec {
+class FormatFuzzSpec extends SparkSpec with TempDirs {
 
   private val hazards: Array[String] = Array(
     "plain", "", "with,comma", "with\"quote", "\"leading quote",
@@ -90,7 +88,7 @@ class FormatFuzzSpec extends SparkSpec {
   import spark.implicits._
 
   test("CSV round-trip is exact over 2000 adversarial rows") {
-    val dir = Files.createTempDirectory("graft_csvfuzz").toString
+    val dir = tempDir("graft_csvfuzz").toString
     val rows = fuzzRows(2000, 71)
     val df = rows.toDF("id", "s", "d")
     // null-vs-empty disambiguation, the quoting recipe: the WRITER
@@ -135,7 +133,7 @@ class FormatFuzzSpec extends SparkSpec {
   test("CSV default options genuinely cannot round-trip null vs empty string") {
     // pins WHY q121-style readers must configure nullValue: with
     // defaults, "" and null both write as empty and both read as null
-    val dir = Files.createTempDirectory("graft_csvnull").toString
+    val dir = tempDir("graft_csvnull").toString
     Seq((1L, ""), (2L, null.asInstanceOf[String]))
       .toDF("id", "s").write.option("header", "true").csv(s"$dir/c")
     val back = spark.read
@@ -148,7 +146,7 @@ class FormatFuzzSpec extends SparkSpec {
   }
 
   test("JSON round-trip is exact for strings; non-finite doubles pinned as null") {
-    val dir = Files.createTempDirectory("graft_jsonfuzz").toString
+    val dir = tempDir("graft_jsonfuzz").toString
     val rows = fuzzRows(2000, 73)
     rows.toDF("id", "s", "d").write.mode("overwrite").json(s"$dir/json")
     val back = spark.read.schema(schema).json(s"$dir/json")

@@ -7,22 +7,25 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SourceScan
 
 /** Pins [[WeatherSink.upsertInto]] as the weather table's one write: a
-  * second `partitionBy("date")` parquet write would bring back a write
-  * plan that scatters a date over several files.
+  * second `partitionBy("year", "month")` parquet write would bring back a
+  * write plan that scatters a month over several files, and a
+  * `partitionBy("date")` one the file-per-day layout.
   */
 class WeatherSinkWriteSpec extends AnyFunSuite {
 
-  private val dateWrite =
-    """\.\s*partitionBy\s*\(\s*"date"\s*\)\s*\.\s*parquet\s*\(""".r
+  private val weatherWrite = ("""\.\s*partitionBy\s*\(\s*("year"\s*,\s*"month"|"date")""" +
+    """\s*\)\s*\.\s*parquet\s*\(""").r
 
   private def writesIn(src: String): Int =
-    dateWrite.findAllIn(SourceScan.codeOnly(src, keepStrings = true)).size
+    weatherWrite.findAllIn(SourceScan.codeOnly(src, keepStrings = true)).size
 
   test("the write scan counts writes in code, not in comments") {
-    val src = "/** `df.write.partitionBy(\"date\").parquet(p)` */\n" +
-      "// df.write.partitionBy(\"date\").parquet(p)\n" +
-      "df.write.mode(\"overwrite\")\n  .partitionBy(\"date\").parquet(p)\n"
-    assert(writesIn(src) === 1)
+    val src = "/** `df.write.partitionBy(\"year\", \"month\").parquet(p)` */\n" +
+      "// df.write.partitionBy(\"year\", \"month\").parquet(p)\n" +
+      "df.write.mode(\"overwrite\")\n  .partitionBy(\"year\",\n" +
+      "    \"month\").parquet(p)\n" +
+      "df.write.partitionBy(\"date\").parquet(p)\n"
+    assert(writesIn(src) === 2)
   }
 
   test("src/main writes the weather table in one place: WeatherSink") {

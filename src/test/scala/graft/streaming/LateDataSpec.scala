@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Pins the two event-time semantics every streaming operator in the
   * engine leans on (WeatherStream.qualityByWindow's append-mode
@@ -24,7 +24,7 @@ import graft.SparkSpec
   * implementation rounding, so the assertions cannot flake on
   * watermark-advance details (no-data batches etc.).
   */
-class LateDataSpec extends SparkSpec {
+class LateDataSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def ts(h: Int, m: Int = 0): Timestamp =
@@ -34,7 +34,7 @@ class LateDataSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Timestamp, Long)]
     var emitted = Vector.empty[(Timestamp, Long)]
-    val ck = java.nio.file.Files.createTempDirectory("graft_late").toString
+    val ck = tempDir("graft_late").toString
     val q = mem.toDF().toDF("ts", "v")
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"))

@@ -2,17 +2,17 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.ingest.Fixtures
 
-class WeatherStreamSpec extends SparkSpec {
+class WeatherStreamSpec extends SparkSpec with TempDirs {
 
   private def writeDocs(dir: java.nio.file.Path, name: String,
       docs: String*): Unit =
     Files.writeString(dir.resolve(name), docs.mkString("\n"))
 
   test("streaming transform applies flatten+dedup+derive over file source") {
-    val src = Files.createTempDirectory("graft_stream_src")
+    val src = tempDir("graft_stream_src")
     // duplicate Nakuru doc in the batch -> dedup keeps one
     writeDocs(src, "a.json", Fixtures.full, Fixtures.full,
       Fixtures.missingOptionals)
@@ -30,8 +30,8 @@ class WeatherStreamSpec extends SparkSpec {
   }
 
   test("micro-batch upsert sink merges per key into the parquet table") {
-    val src = Files.createTempDirectory("graft_stream_src2")
-    val table = Files.createTempDirectory("graft_stream_tbl")
+    val src = tempDir("graft_stream_src2")
+    val table = tempDir("graft_stream_tbl")
       .toString + "/weather"
     writeDocs(src, "day1.json", Fixtures.full)
     val transformed = WeatherStream.transform(spark,
@@ -52,7 +52,7 @@ class WeatherStreamSpec extends SparkSpec {
   }
 
   test("windowed quality aggregation runs in complete mode") {
-    val src = Files.createTempDirectory("graft_stream_src3")
+    val src = tempDir("graft_stream_src3")
     writeDocs(src, "a.json", Fixtures.full, Fixtures.missingOptionals)
     val transformed = WeatherStream.transform(spark,
       WeatherStream.readDocumentStream(spark, src.toString))
