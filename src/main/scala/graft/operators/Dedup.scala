@@ -47,14 +47,15 @@ object Dedup {
     * Pure `DataFrame => DataFrame`, so it is oracle-checkable as
     * `ROW_NUMBER() OVER (PARTITION BY key ORDER BY version DESC) = 1`.
     * On a lakehouse table format this would be `MERGE INTO`; on plain
-    * parquet the caller overwrites the target partition-wise with the
-    * result (write-then-swap, SURVEY.md §7.7).
+    * parquet the caller overwrites the target partitions it touched with
+    * the result (dynamic partition overwrite).
     *
-    * `clusterBy`, columns that are functions of `keys` (so they group no
-    * two distinct keys together), re-key the window's one exchange on them
-    * alone and lead the window's partition spec: the result leaves
-    * hash-clustered on those columns and sorted by them, which is what a
-    * writer partitioned by them needs (one file per value, no writer sort).
+    * `clusterBy` places the merge by [[Slots]]: its columns, functions of
+    * `keys` (so they group no two distinct keys together), and its slot
+    * lead the window's partition spec, and the window's one exchange sends
+    * each listed value to its own task. The result leaves with each value
+    * on one task, sorted by the columns, which is what a writer
+    * partitioned by them needs (one file per value, no writer sort).
     */
   def upsert(
       existing: DataFrame,
@@ -62,14 +63,38 @@ object Dedup {
       keys: Seq[String],
       versionCol: String,
       tiebreak: Seq[Column] = Nil,
-      clusterBy: Seq[String] = Nil): DataFrame = {
+      clusterBy: Option[Slots] = None): DataFrame = {
     val tagged = existing.withColumn("__graft_src", lit(0))
       .unionByName(incoming.withColumn("__graft_src", lit(1)))
     keepFirst(
-      if (clusterBy.isEmpty) tagged else tagged.repartition(clusterBy.map(col): _*),
-      clusterBy ++ keys,
+      clusterBy.fold(tagged)(s => tagged.withColumn("__graft_slot", s.slot)
+        .repartitionById(s.values.size, col("__graft_slot"))),
+      clusterBy.fold(Seq.empty[String])(_.columns :+ "__graft_slot") ++ keys,
       Seq(col(versionCol).desc, col("__graft_src").desc) ++ tiebreak)
-      .drop("__graft_src")
+      .drop("__graft_src", "__graft_slot")
+  }
+
+  /** A placement of rows on `values.size` tasks: a row whose `columns`
+    * equal `values(i)` goes to task `i`. A row whose value is not listed
+    * fails the query rather than land on a task with other values.
+    */
+  final case class Slots(columns: Seq[String], values: Seq[Seq[Any]]) {
+    require(values.nonEmpty && values.forall(_.size == columns.size),
+      s"one value of $columns per slot, and at least one slot")
+
+    /** Each row's task: the index of its value in `values`. The values
+      * fold to one array literal, which generated code reads by reference
+      * rather than inlining, so a new list of values compiles no new code.
+      */
+    def slot: Column = {
+      val listed = array(values.map(v =>
+        struct(columns.zip(v).map { case (c, x) => lit(x).as(c) }: _*)): _*)
+      val at = array_position(listed, struct(columns.map(col): _*))
+      when(at === 0, raise_error(concat(
+          lit(s"no merge slot for ${columns.mkString("(", ", ", ")")} = "),
+          concat_ws(", ", columns.map(col(_).cast("string")): _*))))
+        .otherwise((at - 1).cast("int"))
+    }
   }
 
   /** CDC-style merge with DELETE support: the incoming batch carries a

@@ -21,7 +21,7 @@ import graft.sources.WeatherSink
   * Here the stages are pure `DataFrame => DataFrame` functions composed
   * lazily, and Catalyst sees the whole dataflow and fuses it (SURVEY.md
   * §3.1). The Spark actions are the two `head(1)` emptiness guards, the
-  * sink's collect of the batch's dates, the sink write and the
+  * sink's collect of the batch's months, the sink write and the
   * quality-check collect.
   */
 object WeatherPipeline {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
 import graft.operators.Dedup
 
 /** Durable store for the weather table: parquet partitioned by
-  * (`year`, `month`), one file per month.
+  * (`year`, `month`), one zstd-compressed file per month.
   *
   * Replaces the reference's PostgreSQL sink (DDL py:76-134, upsert
   * py:392-468). Its four b-tree indexes (region / date / data_timestamp /
@@ -20,6 +20,13 @@ import graft.operators.Dedup
   * the same plan holds on a 1000-executor cluster. A month holds a few
   * hundred rows a region, so a file per month keeps the parquet footer a
   * small share of the bytes, where a file per day was mostly footer.
+  *
+  * File format: parquet as Spark writes it (INT96 timestamps, dictionary
+  * and plain pages), compressed with zstd, which stores a table about a
+  * fifth smaller than Spark's default snappy. Files written with another
+  * codec, such as snappy months from before the table used zstd, stay
+  * readable: the reader decodes each file by the codec in its footer, and
+  * the next batch that touches such a month rewrites it as zstd.
   *
   * [[upsertInto]] is the table's one write, so every month directory holds
   * exactly one file and no compaction pass is needed.
@@ -32,19 +39,19 @@ object WeatherSink {
     * py:422-452), scoped to the month partitions the batch touches, and
     * the table's only write: the first load, a batch of new months and a
     * batch over stored months take the same plan. The batch's distinct
-    * dates are collected to the driver (skipped when the table does not
-    * exist yet), the stored months holding them are read with
-    * [[readDates]] (an empty relation when there are none, which Catalyst
-    * prunes from the merge's union), merged with the batch via
-    * [[Dedup.upsert]] and written back with per-write dynamic partition
-    * overwrite. A daily batch therefore costs its own months' IO whatever
-    * the history behind it; untouched months keep their files.
+    * (`year`, `month`) pairs are collected to the driver, the stored
+    * months among them are read as [[readDates]] reads (an empty relation
+    * when there are none, which Catalyst prunes from the merge's union),
+    * merged with the batch via [[Dedup.upsert]] and written back with
+    * per-write dynamic partition overwrite. A daily batch therefore costs
+    * its own months' IO whatever the history behind it; untouched months
+    * keep their files. An empty batch writes nothing.
     *
-    * The merge keys its one exchange on (`year`, `month`) alone
-    * (`clusterBy`), so each touched month is written by one task as one
-    * file, and the window's sort on (`year`, `month`, key, version)
-    * already orders the rows for the partitioned writer, which then sorts
-    * nothing.
+    * The merge places each touched month on its own task (`clusterBy`,
+    * one slot per month in sorted order), so each month is written by one
+    * task as one file and the batch's months merge in parallel, and the
+    * window's sort on (`year`, `month`, slot, key, version) already orders
+    * the rows for the partitioned writer, which then sorts nothing.
     *
     * Commit: Spark writes the touched months to a staging directory, then
     * deletes each touched `year=…/month=…` directory and renames its new
@@ -54,26 +61,26 @@ object WeatherSink {
     */
   def upsertInto(spark: SparkSession, incoming: DataFrame, path: String): Unit = {
     import spark.implicits._
-    val stored =
-      if (!Files.exists(Paths.get(path))) None
-      else {
-        // ingest rejects documents without `dt`, so `date` is never null;
-        // deduplicated per task and then on the driver, which adds no
-        // exchange above the batch's dedup window
-        val dates = incoming.select(col("date").cast("string")).as[String]
-          .mapPartitions(_.toSet.iterator).collect().toSeq
-        readDates(spark, path, dates, incoming.schema)
-      }
-    // `year` and `month` are functions of `data_timestamp`, so clustering
-    // on them keys the same rows together
-    val merged = Dedup.upsert(stored.getOrElse(incoming.limit(0)), incoming,
-      naturalKey, versionCol = "extraction_timestamp",
-      clusterBy = Seq("year", "month"))
-    // per-write dynamic mode, not a session-conf toggle that concurrent
-    // writers could interleave
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("year", "month").parquet(path)
+    // ingest rejects documents without `dt`, so `year` and `month` are
+    // never null; deduplicated per task and then on the driver, which adds
+    // no exchange above the batch's dedup window
+    val months = incoming.select("year", "month").as[(Int, Int)]
+      .mapPartitions(_.toSet.iterator).collect().distinct.sorted.toSeq
+    if (months.nonEmpty) {
+      val stored = readMonths(spark, path, months, incoming.schema)
+      // `year` and `month` are functions of `data_timestamp`, so placing
+      // rows by them keeps each key's rows together
+      val merged = Dedup.upsert(stored.getOrElse(incoming.limit(0)), incoming,
+        naturalKey, versionCol = "extraction_timestamp",
+        clusterBy = Some(Dedup.Slots(Seq("year", "month"),
+          months.map { case (y, m) => Seq(y, m) })))
+      // per-write dynamic mode, not a session-conf toggle that concurrent
+      // writers could interleave
+      merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", "zstd")
+        .partitionBy("year", "month").parquet(path)
+    }
   }
 
   /** The stored month partitions that hold `dates` (`yyyy-MM-dd`), every
@@ -84,9 +91,14 @@ object WeatherSink {
     * a footer to infer it.
     */
   def readDates(spark: SparkSession, path: String, dates: Seq[String],
-      schema: StructType): Option[DataFrame] = {
-    val dirs = dates.map(LocalDate.parse).map(d => (d.getYear, d.getMonthValue))
-      .distinct
+      schema: StructType): Option[DataFrame] =
+    readMonths(spark, path,
+      dates.map(LocalDate.parse).map(d => (d.getYear, d.getMonthValue)), schema)
+
+  /** [[readDates]] of the stored partitions of `months` (`year`, `month`). */
+  private def readMonths(spark: SparkSession, path: String,
+      months: Seq[(Int, Int)], schema: StructType): Option[DataFrame] = {
+    val dirs = months.distinct
       .map { case (y, m) => Paths.get(path).resolve(s"year=$y/month=$m") }
       .filter(Files.isDirectory(_))
     if (dirs.isEmpty) None

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -55,5 +56,51 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.upsert(existing, incoming, Seq("k"), "ver")
     assert(got.columns.toSeq === Seq("k", "ver", "x"))
     assert(got.count() === 3)
+  }
+
+  test("upsert clusterBy puts each listed value on its own task, in list order") {
+    val existing = Seq(("a", 1L, 7), ("b", 1L, 3)).toDF("k", "ver", "g")
+    val incoming = Seq(("a", 2L, 7), ("c", 1L, 5), ("d", 1L, 3))
+      .toDF("k", "ver", "g")
+    val got = Dedup.upsert(existing, incoming, Seq("k"), "ver",
+        clusterBy = Some(Dedup.Slots(Seq("g"), Seq(Seq(3), Seq(5), Seq(7)))))
+      .withColumn("task", spark_partition_id())
+    assert(got.columns.toSeq === Seq("k", "ver", "g", "task"))
+    assert(got.rdd.getNumPartitions === 3)
+    assert(got.orderBy("k").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(3))).toSeq ===
+      Seq(("a", 2L, 2), ("b", 1L, 0), ("c", 1L, 1), ("d", 1L, 0)))
+  }
+
+  test("upsert clusterBy's generated code does not depend on the listed values") {
+    // a batch that touches other months than the last one must reuse the
+    // compiled code, not compile its stages again; the repartitions keep
+    // the optimizer from computing the slots of local rows while planning
+    val existing = Seq(("a", 1L, 7), ("b", 1L, 3)).toDF("k", "ver", "g")
+      .repartition(1)
+    val incoming = Seq(("a", 2L, 7), ("c", 1L, 5)).toDF("k", "ver", "g")
+      .repartition(1)
+    def code(values: Int*) = {
+      val merged = Dedup.upsert(existing, incoming, Seq("k"), "ver",
+        clusterBy = Some(Dedup.Slots(Seq("g"), values.map(Seq(_)))))
+      merged.collect()
+      codegenStringSeq(merged.queryExecution.executedPlan).map(_._2)
+    }
+    val ascending = code(3, 5, 7)
+    assert(ascending.nonEmpty)
+    assert(code(7, 5, 3) === ascending)
+  }
+
+  test("upsert clusterBy fails on a value it has no slot for") {
+    val existing = Seq(("a", 1L, 7)).toDF("k", "ver", "g")
+    val incoming = Seq(("b", 1L, 4)).toDF("k", "ver", "g")
+    val e = intercept[Exception] {
+      Dedup.upsert(existing, incoming, Seq("k"), "ver",
+        clusterBy = Some(Dedup.Slots(Seq("g"), Seq(Seq(7))))).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("no merge slot for (g) = 4")),
+      messages(e).mkString("\n"))
   }
 }

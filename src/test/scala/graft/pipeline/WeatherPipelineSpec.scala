@@ -4,8 +4,10 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graft.ListenerBusBridge
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{ShufflePartitionIdPassThrough,
+  SinglePartition}
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -14,6 +16,8 @@ import org.apache.spark.sql.execution.window.{Final => FinalLimit, WindowExec,
   WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import graft.{SparkSpec, TempDirs}
 import graft.ingest.Fixtures
@@ -227,26 +231,38 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
       override def onFailure(f: String, qe: QueryExecution, e: Exception)
           : Unit = ()
     }
+    ListenerBusBridge.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       body
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      ListenerBusBridge.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    assert(plans.size === 1, "expected one query")
+    assert(plans.size === 1,
+      plans.asScala.mkString("expected one query, got:\n", "\n", ""))
     plans.peek()
   }
 
   private def writePlanOf(body: => Unit): SparkPlan =
     planOf(pathTo[DataWritingCommandExec](_).nonEmpty)(body)
 
-  private def assertHashOnMonth(e: SparkPlan, write: SparkPlan) =
+  /** Fails unless `e` places rows by the merge's slot on one task per
+    * month, `months` tasks in all (Spark plans one task as a single
+    * partition).
+    */
+  private def assertSlotPerMonth(e: SparkPlan, months: Int, write: SparkPlan) =
     e.outputPartitioning match {
-      case h: HashPartitioning =>
-        assert(h.expressions.flatMap(_.references.map(_.name)) ===
-          Seq("year", "month"), write.toString)
-      case other => fail(s"merge exchange is $other, not hash on (year, month)")
+      case p: ShufflePartitionIdPassThrough =>
+        assert(p.numPartitions === months, write.toString)
+        assert(p.expressions.flatMap(_.references.map(_.name)) ===
+          Seq("__graft_slot"), write.toString)
+      case SinglePartition if months == 1 => ()
+      case other => fail(s"merge exchange is $other, not one task per month")
     }
+
+  /** The task number in the name of each parquet file in month `m` of `y`. */
+  private def taskOf(dir: String, y: Int, m: Int): Seq[String] =
+    filesOf(dir, monthDir(y, m)).map { case (f, _) =>
+      "part-(\\d+)-".r.findFirstMatchIn(f).get.group(1) }
 
   test("the merge write clusters on (year, month), with no writer sort") {
     val dir = tempDir("graft_plan").toString + "/t"
@@ -260,13 +276,13 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
     // a stored date, a new date in a stored month and a new month, 2024-02
     val merge = upsert("2024-01-22 06:00:00",
       dayDocs(0, 25.0) ++ dayDocs(2, 22.0) ++ dayDocs(79, 22.0))
-    for (write <- Seq(firstLoad, newMonth, merge)) {
+    for ((write, months) <- Seq(firstLoad -> 2, newMonth -> 1, merge -> 2)) {
       val toWindow = pathTo[WindowExec](write).get
       assert(!toWindow.exists(_.isInstanceOf[SortExec]),
         s"a sort between the window and the write:\n$write")
       // the exchange that feeds the window
-      assertHashOnMonth(pathTo[ShuffleExchangeExec](toWindow.last).get.last,
-        write)
+      assertSlotPerMonth(pathTo[ShuffleExchangeExec](toWindow.last).get.last,
+        months, write)
     }
     // with no stored partition the empty stored side is pruned, union
     // and all
@@ -275,13 +291,99 @@ class WeatherPipelineSpec extends SparkSpec with TempDirs {
     val toUnion = pathTo[UnionExec](merge).get
     val exchanges = toUnion.collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.size === 1, merge.toString)
-    assertHashOnMonth(exchanges.head, merge)
+    assertSlotPerMonth(exchanges.head, 2, merge)
     // the window's partial WindowGroupLimit does not survive the re-key:
     // with no exchange between them Spark drops the partial limit, so the
     // merge prunes no rows before its shuffle (its inputs hold one row per
     // key already: a stored table and a deduplicated batch)
     assert(toUnion.collect { case w: WindowGroupLimitExec => w.mode } ===
       Seq(FinalLimit), merge.toString)
+    // five months on four shuffle partitions: under hash placement at
+    // least two of them share a task, and so a task's part number; the
+    // four stored months and 2024-03 each get their own
+    withSQLConf("spark.sql.shuffle.partitions" -> "4") {
+      WeatherSink.upsertInto(spark, rowsOf("2024-04-01 06:00:00",
+        dayDocs(1, 26.0) ++ dayDocs(18, 26.0) ++ dayDocs(49, 26.0) ++
+          dayDocs(80, 26.0) ++ dayDocs(108, 26.0)), dir)
+    }
+    val months = Seq((2023, 11), (2023, 12), (2024, 1), (2024, 2), (2024, 3))
+    val tasks = months.map { case (y, m) => taskOf(dir, y, m) }
+    assert(tasks.forall(_.size == 1) && tasks.flatten.distinct.size === 5,
+      months.zip(tasks).mkString(", "))
+  }
+
+  /** The compression codec of every column chunk of each parquet file
+    * under `dir`, read from the file's footer.
+    */
+  private def codecsOf(dir: String): Map[String, Set[String]] =
+    filesOf(dir, "").map { case (f, _) =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
+      try f -> reader.getFooter.getBlocks.asScala
+        .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      finally reader.close()
+    }.toMap
+
+  test("upsertInto writes every month it touches with zstd") {
+    val dir = tempDir("graft_codec").toString + "/t"
+    def assertZstd(step: String) = {
+      val codecs = codecsOf(dir)
+      assert(codecs.nonEmpty, step)
+      for ((f, c) <- codecs) assert(c === Set("ZSTD"), s"$step: $f")
+    }
+    // first load: 2023-11 and 2023-12
+    upsertChecked(dir, rowsOf("2024-04-01 06:00:00",
+      dayDocs(0, 20.0) ++ dayDocs(17, 20.0)))
+    assertZstd("first load")
+    // only a new month, 2024-01
+    upsertChecked(dir, rowsOf("2024-04-02 06:00:00", dayDocs(48, 21.0)))
+    assertZstd("new month")
+    // re-extractions in 2023-11 and a new date in 2023-12
+    upsertChecked(dir, rowsOf("2024-04-03 06:00:00",
+      dayDocs(0, 25.0) ++ dayDocs(18, 22.0)))
+    assertZstd("merge")
+  }
+
+  test("a month written with snappy stays readable and is rewritten with zstd when touched") {
+    val dir = tempDir("graft_upgrade").toString + "/t"
+    // 2023-10-14 and 2023-11-14, written as a plain partitioned write,
+    // one snappy file per month
+    rowsOf("2023-11-15 06:00:00", Seq(doc("Nakuru", monthsAgo(1), 21.0),
+        doc("Meru", monthsAgo(0), 22.0), doc("Nakuru", monthsAgo(0), 23.0)))
+      .coalesce(1).write.option("compression", "snappy")
+      .partitionBy("year", "month").parquet(dir)
+    assert(codecsOf(dir).values.toSet === Set(Set("SNAPPY")))
+    val october = filesOf(dir, monthDir(2023, 10))
+    assert(october.size === 1)
+    val stored = spark.read.parquet(dir)
+    val before = spark.createDataFrame(
+      java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+    // a re-extraction and a new date in 2023-11
+    val batch = rowsOf("2023-11-16 06:00:00", Seq(
+      doc("Nakuru", monthsAgo(0), 30.0), doc("Meru", monthsAgo(0) + day, 24.0)))
+    WeatherSink.upsertInto(spark, batch, dir)
+    val november = codecsOf(dir).filter(_._1.contains(monthDir(2023, 11)))
+    assert(november.values.toSeq === Seq(Set("ZSTD")), november.keys.mkString(", "))
+    assert(filesOf(dir, monthDir(2023, 10)) === october,
+      "the untouched snappy month must keep its file")
+    assert(codecsOf(dir).filter(_._1.contains(monthDir(2023, 10))).values.toSeq ===
+      Seq(Set("SNAPPY")))
+    val table = spark.read.parquet(dir)
+    val expected = Dedup.upsert(before, batch, WeatherSink.naturalKey,
+      versionCol = "extraction_timestamp")
+    assert(table.count() === 4)
+    assert(sortedRows(table) ===
+      sortedRows(expected.select(table.columns.map(col): _*)))
+    // run's quality read over the mixed table: the batch's zstd month and
+    // the snappy month
+    val docs = jsonl(Seq(doc("Meru", monthsAgo(0) + 2 * day, 25.0)))
+    for (d <- Seq("2023-11-16", "2023-10-14")) {
+      val got = WeatherPipeline.run(spark, docs, dir, lit(d).cast("date")).quality
+      assert(got === QualityChecks.report(spark.read.parquet(dir),
+        lit(d).cast("date")), d)
+      assert(got.regionCount === 1, d)
+    }
+    assert(filesOf(dir, monthDir(2023, 10)) === october)
   }
 
   /** Fixtures.full for `region` at epoch second `dt` with `temp`. */
